@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line with per-query wall seconds. Results are forced with
   * a noop-format write (full materialisation of every column, no driver
@@ -16,21 +14,12 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // the interleaved passes cycle ~80 queries x several codegen stages
-      // through the generated-class cache (default 100 entries) — without
-      // headroom every rep pays whole-stage recompilation that consecutive
-      // reps amortised, inflating minimums suite-wide
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    // the interleaved passes cycle ~80 queries x several codegen stages
+    // through the generated-class cache (default 100 entries) — without
+    // headroom every rep pays whole-stage recompilation that consecutive
+    // reps amortised, inflating minimums suite-wide
+    val spark = Session.local(extra = Map("spark.sql.codegen.cache.maxEntries" -> "5000"))
     spark.sparkContext.setLogLevel("WARN")
 
     // warm up the JVM/codegen/parquet machinery so the first timed query

@@ -1,14 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 
 /** Plan dumper for the optimization rounds: writes `.explain("formatted")`
   * of each SparkEntry query to `<outDir>/<name>.txt` so plan claims in the
-  * round evidence are reviewable offline. Session config mirrors Bench
-  * (same shuffle partitions, extensions, nanos handling) so the dumped
-  * plan is the one the bench actually times. Note: queries with eager
+  * round evidence are reviewable offline. The session comes from the
+  * same [[Session.local]] Bench uses, so the dumped plan is the one the
+  * bench actually times. Note: queries with eager
   * staging points (localCheckpoint/stage) run those subtrees' Spark jobs
   * at DataFrame-construction time, so dumping is not free of execution.
   *
@@ -19,15 +18,7 @@ object Explain {
     val sfDir = args(0)
     val outDir = args(1)
     val only = if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.toSeq.sortBy(_._1)

@@ -291,7 +291,7 @@ final class BoltTransport(host: String, port: Int,
     }
   }
 
-  def close(): Unit = {
+  override def close(): Unit = {
     if (connected) {
       try { send(Bolt.Structure(Bolt.MsgGoodbye, Vector.empty)) }
       catch { case _: java.io.IOException => () }

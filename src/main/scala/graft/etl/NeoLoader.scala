@@ -24,7 +24,7 @@ import graft.model.Graph
   *
   * Scale notes: statements are generated and executed inside one
   * distributed pass per phase (no driver materialisation of elements);
-  * accounting aggregates one small row per batch. Parallel edge batches
+  * accounting aggregates one small row per partition. Parallel edge batches
   * colliding on transactions is exactly the transient case the retry path
   * covers, as in the reference.
   */
@@ -37,6 +37,11 @@ object NeoLoader {
     */
   trait CypherTransport extends Serializable {
     def run(statement: String): Unit
+
+    /** Releases what [[run]] opened. Each load partition calls it on its
+      * own deserialised copy when the partition is done.
+      */
+    def close(): Unit = ()
   }
 
   /** Retryable failure (the reference retries neo4j TransientError only —
@@ -100,33 +105,8 @@ object NeoLoader {
     * the node-id index, then the edge phase — the ordering edges depend on.
     */
   def load(pg: DataFrame, transport: CypherTransport,
-           config: Config = Config()): Report = {
-    val nodesDone = flagExists(config, "nodes")
-    val edgesDone = flagExists(config, "edges")
-
-    val skipNodes = !config.doNodes || nodesDone
-    // as in the reference: a done-flag skips edges only if nodes were not
-    // just reloaded (reference: src/ketl/io/neoloader.py:487-490)
-    val skipEdges = !config.doEdges || (edgesDone && nodesDone)
-
-    var nodes = 0L; var nodeBatches = 0L
-    var edges = 0L; var edgeBatches = 0L
-    var retries = 0L
-
-    if (!skipNodes) {
-      val (n, b, r) = runPhase(pg, Graph.NodeType, transport, config)
-      nodes = n; nodeBatches = b; retries += r
-      // index node ids between the phases (reference: neoloader.py:384-394)
-      transport.run(NeoCypher.NodeIndexStatement)
-      writeFlag(config, "nodes")
-    }
-    if (!skipEdges) {
-      val (n, b, r) = runPhase(pg, Graph.EdgeType, transport, config)
-      edges = n; edgeBatches = b; retries += r
-      writeFlag(config, "edges")
-    }
-    Report(nodes, edges, nodeBatches, edgeBatches, retries, skipNodes, skipEdges)
-  }
+           config: Config = Config()): Report =
+    runPhases(pg, transport, config, concurrency = None)
 
   /** Async variant (reference: src/ketl/io/neoloader.py:226
     * `async_pg_jsonl_neo_loader`): same phase orchestration as [[load]] —
@@ -150,91 +130,50 @@ object NeoLoader {
   def loadAsync(pg: DataFrame, transport: CypherTransport,
                 config: Config = Config(), maxConcurrency: Int = 8): Report = {
     require(maxConcurrency >= 1, "maxConcurrency must be >= 1")
-    val nodesDone = flagExists(config, "nodes")
-    val edgesDone = flagExists(config, "edges")
-    val skipNodes = !config.doNodes || nodesDone
-    val skipEdges = !config.doEdges || (edgesDone && nodesDone)
-
-    var nodes = 0L; var nodeBatches = 0L
-    var edges = 0L; var edgeBatches = 0L
-    var retries = 0L
-
-    if (!skipNodes) {
-      val (n, b, r) = runPhaseAsync(pg, Graph.NodeType, transport, config, maxConcurrency)
-      nodes = n; nodeBatches = b; retries += r
-      transport.run(NeoCypher.NodeIndexStatement)
-      writeFlag(config, "nodes")
-    }
-    if (!skipEdges) {
-      val (n, b, r) = runPhaseAsync(pg, Graph.EdgeType, transport, config, maxConcurrency)
-      edges = n; edgeBatches = b; retries += r
-      writeFlag(config, "edges")
-    }
-    Report(nodes, edges, nodeBatches, edgeBatches, retries, skipNodes, skipEdges)
+    runPhases(pg, transport, config, Some(maxConcurrency))
   }
 
-  /** One async phase: per partition, a fixed pool of `maxConcurrency`
-    * workers drains the statement stream with semaphore backpressure;
-    * the partition emits its (elements, batches, retries) totals only
-    * after every in-flight batch completed.
+  /** The phase sequence of [[load]]/[[loadAsync]]: done-flags, node phase,
+    * id index, edge phase.
     */
-  private def runPhaseAsync(pg: DataFrame, elementType: String,
-                            transport: CypherTransport, config: Config,
-                            maxConcurrency: Int): (Long, Long, Long) = {
-    val spark = pg.sparkSession
-    import spark.implicits._
-    val maxRetries = config.maxRetries
-    val backoffMs = config.retryBackoffMs
-    val acc = NeoCypher.statementsWithCounts(pg, elementType,
-        config.batchSize, config.propertyConfig)
-      .mapPartitions { it =>
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(maxConcurrency)
-        try {
-          val sem = new java.util.concurrent.Semaphore(maxConcurrency)
-          val futures = scala.collection.mutable.ArrayBuffer
-            .empty[java.util.concurrent.Future[(Long, Long, Long)]]
-          it.foreach { case (stmt, nElems) =>
-            sem.acquire() // backpressure: bounds in-flight AND materialised statements
-            futures += pool.submit(
-              new java.util.concurrent.Callable[(Long, Long, Long)] {
-                override def call(): (Long, Long, Long) = try {
-                  var attempt = 1
-                  var done = false
-                  while (!done) {
-                    try { transport.run(stmt); done = true }
-                    catch { case e: TransientCypherError =>
-                      if (attempt > maxRetries) throw e
-                      if (backoffMs > 0) Thread.sleep(backoffMs * attempt)
-                      attempt += 1
-                    }
-                  }
-                  (nElems.toLong, 1L, (attempt - 1).toLong)
-                } finally sem.release()
-              })
-          }
-          // await everything; unwrap the executor's wrapper so callers see
-          // the transport's own exception, as in the sync path
-          val totals = futures.map { f =>
-            try f.get()
-            catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-          }
-          Iterator.single((totals.map(_._1).sum, totals.map(_._2).sum,
-            totals.map(_._3).sum))
-        } finally pool.shutdown()
+  private def runPhases(pg: DataFrame, transport: CypherTransport, config: Config,
+                        concurrency: Option[Int]): Report = {
+    val nodesDone = flagExists(config, "nodes")
+    val edgesDone = flagExists(config, "edges")
+
+    val skipNodes = !config.doNodes || nodesDone
+    // as in the reference: a done-flag skips edges only if nodes were not
+    // just reloaded (reference: src/ketl/io/neoloader.py:487-490)
+    val skipEdges = !config.doEdges || (edgesDone && nodesDone)
+
+    val (nodes, nodeBatches, nodeRetries) =
+      if (skipNodes) (0L, 0L, 0L)
+      else {
+        val totals = runPhase(pg, Graph.NodeType, transport, config, concurrency)
+        // index node ids between the phases (reference: neoloader.py:384-394)
+        transport.run(NeoCypher.NodeIndexStatement)
+        writeFlag(config, "nodes")
+        totals
       }
-      .toDF("elems", "batches", "retries")
-      .agg(coalesce(sum("elems"), lit(0L)), coalesce(sum("batches"), lit(0L)),
-        coalesce(sum("retries"), lit(0L)))
-      .head()
-    (acc.getLong(0), acc.getLong(1), acc.getLong(2))
+    val (edges, edgeBatches, edgeRetries) =
+      if (skipEdges) (0L, 0L, 0L)
+      else {
+        val totals = runPhase(pg, Graph.EdgeType, transport, config, concurrency)
+        writeFlag(config, "edges")
+        totals
+      }
+    Report(nodes, edges, nodeBatches, edgeBatches, nodeRetries + edgeRetries,
+      skipNodes, skipEdges)
   }
 
   /** One element-kind phase: statements stream per partition through the
-    * transport with bounded retries; returns (elements, batches, retries)
-    * aggregated distributively.
+    * transport, one at a time or `concurrency` in flight; returns
+    * (elements, batches, retries) aggregated distributively. Each
+    * partition closes its copy of the transport when it is done.
     */
   private def runPhase(pg: DataFrame, elementType: String,
-                       transport: CypherTransport, config: Config): (Long, Long, Long) = {
+                       transport: CypherTransport, config: Config,
+                       concurrency: Option[Int]): (Long, Long, Long) = {
     val spark = pg.sparkSession
     import spark.implicits._
     val maxRetries = config.maxRetries
@@ -242,25 +181,69 @@ object NeoLoader {
     val acc = NeoCypher.statementsWithCounts(pg, elementType,
         config.batchSize, config.propertyConfig)
       .mapPartitions { it =>
-        it.map { case (stmt, nElems) =>
-          var attempt = 1
-          var done = false
-          while (!done) {
-            try { transport.run(stmt); done = true }
-            catch { case e: TransientCypherError =>
-              if (attempt > maxRetries) throw e
-              if (backoffMs > 0) Thread.sleep(backoffMs * attempt)
-              attempt += 1
-            }
+        def batch(stmt: String, nElems: Int): (Long, Long, Long) =
+          (nElems.toLong, 1L, runWithRetries(transport, stmt, maxRetries, backoffMs))
+        try {
+          val batches = concurrency match {
+            case None => it.map { case (stmt, n) => batch(stmt, n) }
+            case Some(n) => inFlight(it, n)(batch).iterator
           }
-          (nElems.toLong, 1L, (attempt - 1).toLong)
-        }
+          Iterator.single(batches.foldLeft((0L, 0L, 0L)) {
+            case ((e, b, r), (de, db, dr)) => (e + de, b + db, r + dr)
+          })
+        } finally transport.close()
       }
       .toDF("elems", "batches", "retries")
       .agg(coalesce(sum("elems"), lit(0L)), coalesce(sum("batches"), lit(0L)),
         coalesce(sum("retries"), lit(0L)))
       .head()
     (acc.getLong(0), acc.getLong(1), acc.getLong(2))
+  }
+
+  /** Drains a partition's statements with a fixed pool of `maxConcurrency`
+    * workers and semaphore backpressure; returns only after every
+    * in-flight batch completed.
+    */
+  private def inFlight(it: Iterator[(String, Int)], maxConcurrency: Int)(
+      batch: (String, Int) => (Long, Long, Long)): Seq[(Long, Long, Long)] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(maxConcurrency)
+    try {
+      val sem = new java.util.concurrent.Semaphore(maxConcurrency)
+      val futures = scala.collection.mutable.ArrayBuffer
+        .empty[java.util.concurrent.Future[(Long, Long, Long)]]
+      it.foreach { case (stmt, nElems) =>
+        sem.acquire() // backpressure: bounds in-flight AND materialised statements
+        futures += pool.submit(
+          new java.util.concurrent.Callable[(Long, Long, Long)] {
+            override def call(): (Long, Long, Long) =
+              try batch(stmt, nElems) finally sem.release()
+          })
+      }
+      // await everything; unwrap the executor's wrapper so callers see
+      // the transport's own exception, as in the sync path
+      futures.toSeq.map { f =>
+        try f.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }
+    } finally pool.shutdown()
+  }
+
+  /** Runs one statement, retrying [[TransientCypherError]]s up to
+    * `maxRetries` times with linear backoff; returns the retries used.
+    */
+  private def runWithRetries(transport: CypherTransport, stmt: String,
+                             maxRetries: Int, backoffMs: Long): Long = {
+    var attempt = 1
+    var done = false
+    while (!done) {
+      try { transport.run(stmt); done = true }
+      catch { case e: TransientCypherError =>
+        if (attempt > maxRetries) throw e
+        if (backoffMs > 0) Thread.sleep(backoffMs * attempt)
+        attempt += 1
+      }
+    }
+    (attempt - 1).toLong
   }
 
   private def flagPath(config: Config, suffix: String): Option[java.nio.file.Path] =
@@ -322,11 +305,8 @@ object NeoLoaderCli {
       val conf = NeoLoader.Config.fromConf(fileConf).copy(
         doNodes = doNodes, doEdges = doEdges, doneBasePath = donePath)
       val conf2 = batchSize.fold(conf)(b => conf.copy(batchSize = b))
-      val spark = org.apache.spark.sql.SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val spark = graft.Session.local(extra =
+        sys.env.get("SPARK_GRAFT_MASTER").map("spark.master" -> _).toMap)
       val report = NeoLoader.load(PgGraph.fromJsonl(spark, source.get), transport, conf2)
       println(s"[neoloader] $report")
       0

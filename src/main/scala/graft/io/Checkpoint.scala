@@ -8,9 +8,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `sys.getsizeof` and repartitions to ~256 MB files — an extra job over the
   * data before every save. Here sizing is delegated to the engine: the
   * optimised plan's statistics (already maintained by Catalyst, zero extra
-  * passes) pick the partition count, and `maxRecordsPerFile`-style splitting
-  * is left to the writer. Same outcome — ~target-sized files — without
-  * scanning the data twice.
+  * passes) cap the partition count, so a small output lands in few files
+  * without scanning the data twice. A frame with fewer partitions than
+  * its size calls for is written as it is partitioned, not shuffled up.
   */
 object Checkpoint {
 
@@ -28,33 +28,35 @@ object Checkpoint {
     if (path != null && path.endsWith("/_SUCCESS")) path.dropRight("/_SUCCESS".length)
     else path
 
-  /** Saves a checkpoint, choosing the partition count from the optimised
-    * plan's size estimate (reference behaviour: src/ketl/spark/utils.py:31
-    * df_save). Returns the possibly-repartitioned frame.
+  /** Caps the partition count at the optimised plan's size estimate ÷
+    * [[TargetPartitionBytes]]. The cap is a `coalesce`, so a frame already
+    * at or below the target count keeps its own partitioning and the plan
+    * runs once, inside the write: asking for the current partition count
+    * first would execute every shuffle-map stage of an adaptive plan
+    * before the write ran them again. Catalyst reports
+    * `sizeInBytes = spark.sql.defaultSizeInBytes` (≈ Long.MaxValue) for
+    * unsized sources — "size unknown" — so such frames are left as they
+    * are.
     */
-  /** The stats-driven repartition shared by [[save]]/[[saveAs]]. Catalyst
-    * reports `sizeInBytes = spark.sql.defaultSizeInBytes` (≈ Long.MaxValue)
-    * for unsized sources — a count that would wrap `toInt` negative and in
-    * any case means "size unknown", so such frames keep their current
-    * partitioning instead of an absurd repartition.
-    */
-  private def sizedForWrite(df: DataFrame, targetPartitionBytes: Long): DataFrame = {
+  private def sizedForWrite(df: DataFrame): DataFrame = {
     val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     if (estBytes >= BigInt(Long.MaxValue) / 2) df
     else {
-      val target = BigInt(targetPartitionBytes)
+      val target = BigInt(TargetPartitionBytes)
       val wanted = ((estBytes + target - 1) / target).max(1)
         .min(BigInt(Int.MaxValue)).toInt
-      val current = df.rdd.getNumPartitions
-      if (wanted < current) df.coalesce(wanted)
-      else if (wanted > current) df.repartition(wanted)
-      else df
+      df.coalesce(wanted)
     }
   }
 
-  def save(df: DataFrame, path: String,
-           targetPartitionBytes: Long = TargetPartitionBytes): DataFrame = {
-    val out = sizedForWrite(df, targetPartitionBytes)
+  /** Saves a checkpoint as parquet in at most one file per
+    * [[TargetPartitionBytes]] of the optimised plan's size estimate
+    * (reference behaviour: src/ketl/spark/utils.py:31 df_save). A frame
+    * already at or below that count keeps its own partitioning. Returns
+    * the frame as written.
+    */
+  def save(df: DataFrame, path: String): DataFrame = {
+    val out = sizedForWrite(df)
     out.write.mode("overwrite").parquet(basePath(path))
     out
   }
@@ -81,9 +83,8 @@ object Checkpoint {
     * [[DataFrames.readTable]] defaults can read them back). Same
     * stats-driven partition sizing as [[save]].
     */
-  def saveAs(df: DataFrame, path: String, format: String,
-             targetPartitionBytes: Long = TargetPartitionBytes): DataFrame = {
-    val out = sizedForWrite(df, targetPartitionBytes)
+  def saveAs(df: DataFrame, path: String, format: String): DataFrame = {
+    val out = sizedForWrite(df)
     val w = out.write.mode("overwrite")
     (if (format == "csv") w.option("header", "true") else w).format(format).save(basePath(path))
     out

@@ -25,16 +25,6 @@ object DataFrames {
     else df.withColumns(applicable.map(c => c -> df(c).cast(specs(c))).toMap)
   }
 
-  /** Salted equi-join for skewed keys: the skewed (big) side gets a random
-    * salt in [0, salts); the other side is replicated `salts` times; the
-    * join key becomes (key, salt), splitting each hot key's rows across
-    * `salts` reducers. Use when one key dominates a shuffle join and AQE
-    * skew-splitting isn't available/enough; `salts` multiplies the small
-    * side, so keep it modest (8-32).
-    *
-    * Semantics identical to `big.join(small, bigKey === smallKey, joinType)`
-    * for inner/left joins (each big row matches exactly one replica).
-    */
   /** Spread a narrow source across the cluster before an expensive narrow
     * stage: a table that arrives as fewer splits than cores (one small
     * parquet file, a fresh union) would otherwise run the whole tokenise/
@@ -100,6 +90,16 @@ object DataFrames {
       (staged, obs.get)
     }
 
+  /** Salted equi-join for skewed keys: the skewed (big) side gets a random
+    * salt in [0, salts); the other side is replicated `salts` times; the
+    * join key becomes (key, salt), splitting each hot key's rows across
+    * `salts` reducers. Use when one key dominates a shuffle join and AQE
+    * skew-splitting isn't available/enough; `salts` multiplies the small
+    * side, so keep it modest (8-32).
+    *
+    * Semantics identical to `big.join(small, bigKey === smallKey, joinType)`
+    * for inner/left joins (each big row matches exactly one replica).
+    */
   def saltedJoin(big: DataFrame, small: DataFrame, bigKey: Column, smallKey: Column,
                  salts: Int, joinType: String = "inner"): DataFrame = {
     val saltedBig = big.withColumn("__salt", (rand(17) * salts).cast("int"))

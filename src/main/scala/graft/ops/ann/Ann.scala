@@ -346,7 +346,7 @@ object Ann {
     * (cosine ≥ 0.45, zero false positives everywhere — candidates stay
     * exactly verified): single-probe b=16 recall 0.891 / 5 s; b=32
     * 0.920 / 6 s; b=64 0.947 / 9 s; MULTI-probe b=8 0.943 / 10 s; b=16
-    * 0.970 / 21 s; b=32 0.992 / 38 s (graft.tools.PairRecall). The
+    * 0.970 / 21 s; b=32 0.992 / 38 s (ROUND12_EVIDENCE.md). The
     * recall ≥ 0.95 configuration is multiProbe with the default b=16;
     * multi-probe beats band-doubling per unit recall because posting
     * lists stay the same size. Cost is linear and priced:
@@ -660,14 +660,14 @@ object Ann {
     // band — both counts are bounded (the staged batch, the checkpointed
     // index). Above `maxCandidates`, multi-probe degrades to single-probe;
     // measured at the 100x replica (20k batch vs 180k index,
-    // graft.tools.IncProbeCost): single-probe 16.7–41.6 s / 1,011,681
+    // ROUND15_EVIDENCE.md): single-probe 16.7–41.6 s / 1,011,681
     // pairs vs multi-probe 211–247 s / 1,075,428 — ×12.7 cheaper for 94.1%
     // of the pairs, the priced recall trade. If even single-probe exceeds
     // the budget, refuse with the levers named. 0 disables pricing.
     //
     // The increment's DEFAULT budget is 30M — deliberately far below the
     // batch op's 200M, because the increment's economics were MEASURED
-    // (IncProbeCost, 100x replica): at ~109M priced candidates the
+    // (ROUND15_EVIDENCE.md, 100x replica): at ~109M priced candidates the
     // multi-probe verify phase ran 211–347 s on a 32-thread box (~0.4M
     // verified candidates/s), i.e. inheriting 200M admits ten-minute
     // increments — the wrong default for an op whose contract is a cheap

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.etl.PgGraph
 import graft.queries.GraphEtl
 
@@ -11,7 +9,7 @@ import graft.queries.GraphEtl
   * edges) the reference's `triples_2_pg_df` (4 filtered groupBys +
   * 3 joins, reference src/ketl/io/core.py:16) is timed on — the
   * conversion is isolated from the tabmap cost on both sides. Protocol
-  * matches graft.Bench: local[32], 32 shuffle partitions, noop sink,
+  * matches graft.Bench: the same [[graft.Session.local]], noop sink,
   * 1 discarded warmup + reps (min).
   *
   * Usage: `sbt "runMain graft.tools.BenchPgConvert <sfDir>"`.
@@ -19,15 +17,8 @@ import graft.queries.GraphEtl
 object BenchPgConvert {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("WARN")
 
     val triples = GraphEtl.tabmapNodes(spark, sfDir)

@@ -1,0 +1,51 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Keeps the main source tree's entry points in one shape: sessions come
+  * from [[Session.local]] (or the user-configured
+  * [[graft.io.Config.sparkSession]]), and every main that ships is named
+  * in README's tool list, which names no other.
+  */
+class SourceLayoutSpec extends AnyFunSuite {
+
+  private val root = Paths.get("src/main/scala")
+
+  private lazy val sources: Seq[(Path, String)] =
+    Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p) -> Files.readString(p))
+      .toSeq
+
+  test("SparkSession.builder appears only in the session factory and Config") {
+    val sites = sources.collect {
+      case (p, src) if src.contains("SparkSession.builder") => p.toString
+    }.sorted
+    assert(sites === Seq("graft/Session.scala", "graft/io/Config.scala").sorted)
+  }
+
+  test("README's tool list names exactly the mains that ship") {
+    val objectDecl = """\bobject\s+(\w+)""".r
+    val mains = sources.flatMap { case (_, src) =>
+      val pkg = """(?m)^package\s+([\w.]+)""".r.findFirstMatchIn(src).map(_.group(1)).get
+      """\bdef\s+main\s*\(""".r.findAllMatchIn(src).map { m =>
+        // the innermost object declared before the `def main`
+        val obj = objectDecl.findAllMatchIn(src.substring(0, m.start)).toSeq.last.group(1)
+        s"$pkg.$obj"
+      }
+    }.toSet
+    assert(mains.contains("graft.Bench") && mains.contains("graft.Verify"))
+
+    val readme = Files.readString(Paths.get("README.md"))
+    val from = readme.indexOf("## Layout / verification")
+    assert(from >= 0, "README has no tool list section")
+    val next = readme.indexOf("\n## ", from + 1)
+    val toolList = readme.substring(from, if (next < 0) readme.length else next)
+    val named = """`(graft\.[\w.]+)[` ]""".r.findAllMatchIn(toolList).map(_.group(1)).toSet
+    assert(named === mains)
+  }
+}

@@ -32,6 +32,8 @@ class BoltTransportSpec extends SparkSpec {
     val server = new ServerSocket(0)
     val statements = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val resets = new java.util.concurrent.atomic.AtomicInteger(0)
+    val accepted = new java.util.concurrent.atomic.AtomicInteger(0)
+    val goodbyes = new java.util.concurrent.atomic.AtomicInteger(0)
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     @volatile var closed = false
 
@@ -70,6 +72,7 @@ class BoltTransportSpec extends SparkSpec {
     private val acceptor = new Thread(() => {
       try while (!closed) {
         val sock = server.accept()
+        accepted.incrementAndGet()
         new Thread(() => {
           try {
             val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
@@ -105,6 +108,7 @@ class BoltTransportSpec extends SparkSpec {
                     send(out, Bolt.Structure(Bolt.MsgSuccess,
                       Vector(Map.empty[String, Any])))
                   case Bolt.MsgGoodbye =>
+                    goodbyes.incrementAndGet()
                     open = false; sock.close()
                   case t => throw new IllegalStateException(s"stub: unexpected tag $t")
                 }
@@ -233,6 +237,28 @@ class BoltTransportSpec extends SparkSpec {
       assert(idxAt > 0, s"no index statement in $got")
       assert(got.take(idxAt).forall(s => s.contains("$nodes") || !s.contains("$edges")))
       assert(got.drop(idxAt + 1).nonEmpty)
+    } finally stub.close()
+  }
+
+  test("NeoLoader closes every task's connection with GOODBYE when its partition is done") {
+    import spark.implicits._
+    val triples = (1 to 6).flatMap(i => Seq(
+      (s"n$i", Graph.TypeKey, "Gene"),
+      (s"e$i", Graph.TypeKey, "interacts"),
+      (s"e$i", Graph.FromKey, s"n$i"), (s"e$i", Graph.ToKey, s"n${i % 6 + 1}")))
+      .toDF("id", "key", "value")
+    val pg = PgGraph.toPg(triples).repartition(3)
+    val stub = new StubServer()
+    try {
+      val transport = new BoltTransport("127.0.0.1", stub.port)
+      NeoLoader.load(pg, transport, NeoLoader.Config(batchSize = 1))
+      transport.close() // the caller's own copy, which ran the index statement
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (stub.goodbyes.get() < stub.accepted.get() && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(stub.accepted.get() > 1, "no task opened a connection")
+      assert(stub.goodbyes.get() === stub.accepted.get(),
+        s"${stub.accepted.get() - stub.goodbyes.get()} connection(s) left open")
     } finally stub.close()
   }
 

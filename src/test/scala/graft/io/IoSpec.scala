@@ -137,6 +137,36 @@ class IoSpec extends SparkSpec {
     assert(Checkpoint.loadAs(spark, s"$base/o.orc", "orc").count() === 100)
   }
 
+  test("checkpoint save runs its plan once: the shuffle is written once, into one part file") {
+    // under AQE, asking a frame for its partition count executes every
+    // shuffle-map stage, and the write then executes them again
+    def grouped = spark.range(20000).groupBy((col("id") % 97).as("k")).agg(sum("id").as("s"))
+    def measure(write: String => Unit): (Int, Long, Int) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          Option(te.taskMetrics).foreach(m =>
+            shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+      }
+      val dir = java.nio.file.Files.createTempDirectory("graft-once").resolve("out.parquet")
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        write(dir.toString)
+        org.apache.spark.ListenerBus.drain(spark.sparkContext)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      val parts = dir.toFile.list().count(_.startsWith("part-"))
+      (jobs.get(), shuffleBytes.get(), parts)
+    }
+    val plain = measure(p => grouped.coalesce(1).write.parquet(p))
+    val saved = measure(p => Checkpoint.save(grouped, p))
+    assert(plain._2 > 0, "fixture no longer shuffles")
+    assert(saved === plain, "(jobs, shuffle bytes written, part files)")
+    assert(saved._3 === 1)
+  }
+
   test("ORC checkpoints round-trip with pushdown and pruning intact; csv/json interchange") {
     val base = java.nio.file.Files.createTempDirectory("graft-fmt").toString
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
