@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Bounded
 import graft.model.Graph
 
 /** Graph-database loading facade (reference: src/ketl/io/neoloader.py:563-744
@@ -33,7 +34,9 @@ object NeoLoader {
   /** Executor-side Cypher endpoint. Implementations must be serializable —
     * they ship to executors. Throw [[TransientCypherError]] for failures
     * that deserve a retry (lock/transaction collisions); anything else
-    * fails the load.
+    * fails the load. The caller's own copy runs the index statement, and
+    * [[Workflow.run]] runs the load steps of one wave concurrently, so it
+    * may see calls from several threads at once.
     */
   trait CypherTransport extends Serializable {
     def run(statement: String): Unit
@@ -124,8 +127,10 @@ object NeoLoader {
     * awaits ALL its in-flight batches before completing, and the Spark
     * action is a barrier across partitions — so every node batch has
     * finished (cluster-wide) before the index statement runs, and every
-    * edge batch starts after it. The first terminal failure in any
-    * in-flight task rethrows and fails the load, as in [[load]].
+    * edge batch starts after it. A terminal failure stops the partition
+    * submitting batches; the partition waits for its in-flight batches to
+    * return before it closes its transport, then rethrows the first failure
+    * in batch order and fails the load, as in [[load]].
     */
   def loadAsync(pg: DataFrame, transport: CypherTransport,
                 config: Config = Config(), maxConcurrency: Int = 8): Report = {
@@ -186,7 +191,7 @@ object NeoLoader {
         try {
           val batches = concurrency match {
             case None => it.map { case (stmt, n) => batch(stmt, n) }
-            case Some(n) => inFlight(it, n)(batch).iterator
+            case Some(n) => Bounded.map(it, n) { case (stmt, k) => batch(stmt, k) }.iterator
           }
           Iterator.single(batches.foldLeft((0L, 0L, 0L)) {
             case ((e, b, r), (de, db, dr)) => (e + de, b + db, r + dr)
@@ -198,34 +203,6 @@ object NeoLoader {
         coalesce(sum("retries"), lit(0L)))
       .head()
     (acc.getLong(0), acc.getLong(1), acc.getLong(2))
-  }
-
-  /** Drains a partition's statements with a fixed pool of `maxConcurrency`
-    * workers and semaphore backpressure; returns only after every
-    * in-flight batch completed.
-    */
-  private def inFlight(it: Iterator[(String, Int)], maxConcurrency: Int)(
-      batch: (String, Int) => (Long, Long, Long)): Seq[(Long, Long, Long)] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(maxConcurrency)
-    try {
-      val sem = new java.util.concurrent.Semaphore(maxConcurrency)
-      val futures = scala.collection.mutable.ArrayBuffer
-        .empty[java.util.concurrent.Future[(Long, Long, Long)]]
-      it.foreach { case (stmt, nElems) =>
-        sem.acquire() // backpressure: bounds in-flight AND materialised statements
-        futures += pool.submit(
-          new java.util.concurrent.Callable[(Long, Long, Long)] {
-            override def call(): (Long, Long, Long) =
-              try batch(stmt, nElems) finally sem.release()
-          })
-      }
-      // await everything; unwrap the executor's wrapper so callers see
-      // the transport's own exception, as in the sync path
-      futures.toSeq.map { f =>
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      }
-    } finally pool.shutdown()
   }
 
   /** Runs one statement, retrying [[TransientCypherError]]s up to

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
+import graft.Bounded
 import graft.io.{Checkpoint, DataFrames}
 
 /** Config-driven multi-step workflow runner — graft's counterpart of the
@@ -18,8 +19,15 @@ import graft.io.{Checkpoint, DataFrames}
   * a step whose outputs are already checkpointed is SKIPPED — rerunning a
   * half-finished workflow resumes where it stopped, the property the
   * reference gets from Snakemake + df_check_path `_SUCCESS` markers.
-  * Ready steps run in deterministic name order, so a run's step sequence
-  * is reproducible.
+  * Steps run in waves: every step whose inputs are satisfied runs in the
+  * same wave, concurrently, on at most the session's default parallelism
+  * of threads, and a pg step loads its input checkpoints the same way.
+  * Each step writes only its own output, so only the order in which Spark
+  * schedules their jobs changes. A wave's runs are reported in name order.
+  * A failed step fails the run only after every sibling in its wave has
+  * finished, so the finished ones keep their markers for a resume; the
+  * exception rethrown is the first failure in name order. Every step is
+  * validated before any runs.
   *
   * Mapper CODE is bound by NAME through a registry (`mappers`), exactly as
   * the reference's snakefile references mapper objects defined in
@@ -71,8 +79,13 @@ object Workflow {
     }
   }
 
-  /** One executed (or skipped) step, in execution order. */
+  /** One executed (or skipped) step; runs are listed wave by wave, each
+    * wave in name order.
+    */
   final case class StepRun(name: String, kind: String, skipped: Boolean)
+
+  /** Local property naming the workflow step that started a Spark job. */
+  val StepProperty = "graft.workflow.step"
 
   /** Extracts the step table from a parsed config's dotted keys
     * (`workflow.steps.<name>.<key> -> value`).
@@ -148,9 +161,10 @@ object Workflow {
 
   /** Runs (or resumes) the workflow. Map steps resolve their mapper from
     * the code `mappers` registry first, then from `workflow.mappers.*`
-    * config declarations ([[mapperFromConf]]). Returns the step runs in
-    * execution order; `skipped = true` marks steps whose outputs were
-    * already checkpointed.
+    * config declarations ([[mapperFromConf]]). Returns the step runs wave
+    * by wave, each wave in name order; `skipped = true` marks steps whose
+    * outputs were already checkpointed. Each step's Spark jobs carry its
+    * name in the local property [[StepProperty]].
     */
   def run(spark: SparkSession, conf: Map[String, String],
           mappers: Map[String, TabFileMapper] = Map.empty,
@@ -158,6 +172,7 @@ object Workflow {
       : Seq[StepRun] = {
     var pending = steps(conf)
     require(pending.nonEmpty, "workflow: no steps configured")
+    val mapperOf = validate(pending, conf, mappers)
     // Inputs that are another step's DECLARED OUTPUT must carry that
     // step's completion marker (`_SUCCESS` checkpoint / both load phase
     // flags): a producer that crashed mid-write leaves the directory on
@@ -180,7 +195,10 @@ object Workflow {
           "workflow stuck — no step's inputs are satisfiable: " +
             blocked.map(s => s"${s.name} waits on " +
               s.inputs.filterNot(satisfied).mkString(", ")).mkString("; "))
-      ready.foreach(s => runs += exec(spark, s, conf, mappers, transport))
+      runs ++= Bounded.map(ready, spark.sparkContext.defaultParallelism) { s =>
+        spark.sparkContext.setLocalProperty(StepProperty, s.name)
+        exec(spark, s, mapperOf, transport)
+      }
       pending = blocked
     }
     runs.result()
@@ -203,22 +221,46 @@ object Workflow {
     Files.exists(Paths.get(trimmed + ".nodes")) && Files.exists(Paths.get(trimmed + ".edges"))
   }
 
-  private def exec(spark: SparkSession, step: Step, conf: Map[String, String],
-                   mappers: Map[String, TabFileMapper],
+  private val Kinds = Set("map", "pg", "jsonl", "load")
+
+  /** Checks every step before any runs, so a misconfigured step cannot fail
+    * a wave after its siblings have written: every kind is known, no two
+    * steps declare the same output (they would be two writers into one
+    * directory), and every map step's mapper resolves. Returns each map
+    * step's mapper by step name.
+    */
+  private def validate(steps: Seq[Step], conf: Map[String, String],
+                       mappers: Map[String, TabFileMapper]): Map[String, TabFileMapper] = {
+    steps.find(s => !Kinds(s.kind)).foreach { s =>
+      throw new IllegalArgumentException(
+        s"workflow step ${s.name}: unknown kind '${s.kind}' " +
+          "(expected map | pg | jsonl | load)")
+    }
+    steps.groupBy(s => Checkpoint.basePath(s.output)).toSeq.sortBy(_._1).foreach {
+      case (out, writers) if writers.size > 1 =>
+        throw new IllegalArgumentException(
+          s"workflow steps ${writers.map(_.name).mkString(", ")} all declare output $out")
+      case _ =>
+    }
+    steps.filter(_.kind == "map").map { s =>
+      val mapperName = s.conf.getOrElse("mapper",
+        throw new IllegalArgumentException(s"workflow step ${s.name}: missing mapper"))
+      s.name -> mappers.get(mapperName)
+        .orElse(mapperFromConf(conf, mapperName))
+        .getOrElse(throw new IllegalArgumentException(
+          s"workflow step ${s.name}: mapper '$mapperName' not registered " +
+            s"and not declared under workflow.mappers " +
+            s"(registry has: ${mappers.keys.toSeq.sorted.mkString(", ")})"))
+    }.toMap
+  }
+
+  private def exec(spark: SparkSession, step: Step, mapperOf: Map[String, TabFileMapper],
                    transport: NeoLoader.CypherTransport): StepRun = step.kind match {
     case "map" =>
       val out = Checkpoint.basePath(step.output)
       if (checkpointDone(out)) StepRun(step.name, "map", skipped = true)
       else {
-        val mapperName = step.conf.getOrElse("mapper",
-          throw new IllegalArgumentException(s"workflow step ${step.name}: missing mapper"))
-        val m = mappers.get(mapperName)
-          .orElse(mapperFromConf(conf, mapperName))
-          .getOrElse(throw new IllegalArgumentException(
-            s"workflow step ${step.name}: mapper '$mapperName' not registered " +
-              s"and not declared under workflow.mappers " +
-              s"(registry has: ${mappers.keys.toSeq.sorted.mkString(", ")})"))
-        m.map(spark, step.inputs.head, outPath = Some(out))
+        mapperOf(step.name).map(spark, step.inputs.head, outPath = Some(out))
         StepRun(step.name, "map", skipped = false)
       }
 
@@ -226,8 +268,8 @@ object Workflow {
       val out = Checkpoint.basePath(step.output)
       if (checkpointDone(out)) StepRun(step.name, "pg", skipped = true)
       else {
-        val triples = DataFrames.unionAllByName(
-          step.inputs.map(p => Checkpoint.load(spark, p)))
+        val triples = DataFrames.unionAllByName(Bounded.map(step.inputs,
+          spark.sparkContext.defaultParallelism)(Checkpoint.load(spark, _)))
         Checkpoint.save(PgGraph.toPg(triples), out)
         StepRun(step.name, "pg", skipped = false)
       }
@@ -253,10 +295,5 @@ object Workflow {
         StepRun(step.name, "load",
           skipped = report.nodesSkipped && report.edgesSkipped)
       }
-
-    case other =>
-      throw new IllegalArgumentException(
-        s"workflow step ${step.name}: unknown kind '$other' " +
-          "(expected map | pg | jsonl | load)")
   }
 }

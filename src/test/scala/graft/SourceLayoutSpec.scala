@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps the main source tree's entry points in one shape: sessions come
   * from [[Session.local]] (or the user-configured
-  * [[graft.io.Config.sparkSession]]), and every main that ships is named
-  * in README's tool list, which names no other.
+  * [[graft.io.Config.sparkSession]]), thread pools from [[Bounded.map]],
+  * and every main that ships is named in README's tool list, which names
+  * no other.
   */
 class SourceLayoutSpec extends AnyFunSuite {
 
@@ -26,6 +27,13 @@ class SourceLayoutSpec extends AnyFunSuite {
       case (p, src) if src.contains("SparkSession.builder") => p.toString
     }.sorted
     assert(sites === Seq("graft/Session.scala", "graft/io/Config.scala").sorted)
+  }
+
+  test("java.util.concurrent.Executors appears only in the bounded-concurrency helper") {
+    val sites = sources.collect {
+      case (p, src) if """\bExecutors\b""".r.findFirstIn(src).isDefined => p.toString
+    }.sorted
+    assert(sites === Seq("graft/Bounded.scala"))
   }
 
   test("README's tool list names exactly the mains that ship") {

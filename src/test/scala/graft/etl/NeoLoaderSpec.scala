@@ -161,6 +161,20 @@ class NeoLoaderSpec extends SparkSpec {
     }
   }
 
+  test("async load closes a partition's transport only after its in-flight batches return") {
+    // one partition, one node per batch, two in flight: the first batch
+    // fails for good while the second is still inside the transport
+    LatchTransport.reset()
+    val e = intercept[org.apache.spark.SparkException] {
+      NeoLoader.loadAsync(pg.coalesce(1), new LatchTransport,
+        NeoLoader.Config(batchSize = 1), maxConcurrency = 2)
+    }
+    assert(e.getMessage.contains(LatchTransport.Failure))
+    assert(LatchTransport.closes.get() === 1)
+    assert(!LatchTransport.closedInFlight.get(),
+      "close() ran while a batch was still inside run()")
+  }
+
   test("CLI loads a JSONL.pg file through the config-driven path") {
     RecordingTransport.reset(failFirst = 0)
     val dir = Files.createTempDirectory("neocli")
@@ -237,5 +251,47 @@ object ProbeTransport {
   def snapshot: List[(String, Long, Long)] = {
     import scala.jdk.CollectionConverters._
     events.asScala.toList
+  }
+}
+
+/** Serializable transport whose first batch fails with a non-transient
+  * error once a second batch is inside [[run]]; that second batch then
+  * blocks for up to a second, or until [[close]] is called. Records whether
+  * [[close]] ran while a batch was in flight. State lives in the companion
+  * so local-mode tasks and the driver share it.
+  */
+class LatchTransport extends NeoLoader.CypherTransport {
+  import LatchTransport._
+  override def run(statement: String): Unit = {
+    inFlight.incrementAndGet()
+    try {
+      if (calls.incrementAndGet() == 1) {
+        secondStarted.await(10, java.util.concurrent.TimeUnit.SECONDS)
+        throw new IllegalStateException(Failure)
+      }
+      secondStarted.countDown()
+      released.await(1, java.util.concurrent.TimeUnit.SECONDS)
+    } finally inFlight.decrementAndGet()
+  }
+
+  override def close(): Unit = {
+    if (inFlight.get() > 0) closedInFlight.set(true)
+    closes.incrementAndGet()
+    released.countDown()
+  }
+}
+
+object LatchTransport {
+  val Failure = "simulated constraint violation"
+  val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+  val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
+  val closes = new java.util.concurrent.atomic.AtomicInteger(0)
+  val closedInFlight = new java.util.concurrent.atomic.AtomicBoolean(false)
+  @volatile var secondStarted = new java.util.concurrent.CountDownLatch(1)
+  @volatile var released = new java.util.concurrent.CountDownLatch(1)
+  def reset(): Unit = {
+    calls.set(0); inFlight.set(0); closes.set(0); closedInFlight.set(false)
+    secondStarted = new java.util.concurrent.CountDownLatch(1)
+    released = new java.util.concurrent.CountDownLatch(1)
   }
 }

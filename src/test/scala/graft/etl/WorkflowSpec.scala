@@ -2,6 +2,10 @@ package graft.etl
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -13,8 +17,9 @@ import graft.io.{Checkpoint, Config}
   * step DAG (map × 3 → pg → jsonl → load), the registry carries the mapper
   * code — the split the reference has between workflow.snakefile and
   * wf_mapping.py. Asserts the Snakemake properties the runner reproduces:
-  * file-derived ordering, `_SUCCESS`/done-flag skip on rerun, and partial
-  * resume after deleting one intermediate.
+  * file-derived ordering, `_SUCCESS`/done-flag skip on rerun, partial
+  * resume after deleting one intermediate, and a wave of ready steps run
+  * concurrently with its failures waited out.
   */
 class WorkflowSpec extends SparkSpec {
 
@@ -98,6 +103,46 @@ class WorkflowSpec extends SparkSpec {
     val conf = Config.parse(configText,
       env = Map("KETL_DATA" -> data, "KETL_IN" -> in))
     (conf, data)
+  }
+
+  /** The config restricted to the named steps. */
+  private def only(conf: Map[String, String], names: String*): Map[String, String] =
+    conf.filter { case (k, _) =>
+      !k.startsWith("workflow.steps.") || names.exists(n => k.startsWith(s"workflow.steps.$n."))
+    }
+
+  private val mapSteps = Seq("s1_map_encodes", "s1_map_genes", "s1_map_proteins")
+
+  private def successMarkers(data: String): Seq[String] = {
+    val s = Files.walk(Paths.get(data))
+    try s.iterator().asScala.filter(_.getFileName.toString == "_SUCCESS").map(_.toString).toSeq
+    finally s.close()
+  }
+
+  /** A Spark job: the workflow step and job group it was started under,
+    * and its start and end times (ms).
+    */
+  private case class Job(step: Option[String], group: Option[String], start: Long, end: Long)
+
+  /** Runs `body` and returns its result with every job it started. */
+  private def recordingJobs[T](body: => T): (T, Seq[Job]) = {
+    val sc = spark.sparkContext
+    ListenerBus.drain(sc)
+    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (java.util.Properties, Long)]()
+    val ends = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.put(e.jobId, (Option(e.properties).getOrElse(new java.util.Properties), e.time))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ends.put(e.jobId, e.time)
+    }
+    sc.addSparkListener(listener)
+    val result =
+      try body
+      finally { ListenerBus.drain(sc); sc.removeSparkListener(listener) }
+    (result, starts.asScala.toSeq.map { case (id, (props, start)) =>
+      Job(Option(props.getProperty(Workflow.StepProperty)),
+        Option(props.getProperty("spark.jobGroup.id")), start, ends.get(id))
+    })
   }
 
   test("config-driven run executes the full DAG in dependency order") {
@@ -222,11 +267,23 @@ class WorkflowSpec extends SparkSpec {
   }
 
   test("misconfiguration fails loud: unknown mapper, unsatisfiable input, bad kind") {
-    val (conf, _) = setup()
+    // every step is validated before any runs: no sibling writes a checkpoint
+    val (conf, data) = setup()
     val noMapper = intercept[IllegalArgumentException] {
       Workflow.run(spark, conf, registry - "proteins", new RecordingTransport)
     }
     assert(noMapper.getMessage.contains("not registered"))
+    assert(successMarkers(data).isEmpty, successMarkers(data).mkString(", "))
+
+    // two steps declaring one output would be two writers into one directory
+    val duplicate = intercept[IllegalArgumentException] {
+      Workflow.run(spark,
+        conf + ("workflow.steps.s1_map_proteins.output" -> s"$data/tmp/gene-triples.parquet"),
+        registry, new RecordingTransport)
+    }
+    assert(duplicate.getMessage.contains("s1_map_genes, s1_map_proteins"))
+    assert(duplicate.getMessage.contains("gene-triples.parquet"))
+    assert(successMarkers(data).isEmpty, successMarkers(data).mkString(", "))
 
     val (conf2, _) = setup()
     val stuck = intercept[IllegalArgumentException] {
@@ -291,5 +348,66 @@ class WorkflowSpec extends SparkSpec {
     // and s3 consumed the REBUILT graph, not the garbage
     val pg = Checkpoint.load(spark, s"$data/tmp/kg-pg.parquet")
     assert(pg.count() === 14)
+  }
+
+  test("a wave's map steps run concurrently: their jobs overlap in time") {
+    val (conf, _) = setup()
+    // every triple row waits, so each step's write job spans about half a
+    // second and steps run one after another could not overlap
+    val pause = udf((s: String) => { Thread.sleep(40); s })
+    val slow = registry.map { case (name, m) =>
+      name -> m.copy(mapper = df => m.mapper(df).withColumn("id", pause(col("id"))))
+    }
+    val (runs, jobs) = recordingJobs(Workflow.run(spark, only(conf, mapSteps: _*), slow))
+    assert(runs.map(_.name) === mapSteps)
+    val mapJobs = jobs.filter(_.step.exists(mapSteps.contains))
+    val overlapping = for {
+      a <- mapJobs; b <- mapJobs
+      if a.step != b.step && a.start < b.end && b.start < a.end
+    } yield (a.step, b.step)
+    assert(overlapping.nonEmpty, s"no two map steps' jobs overlapped: $mapJobs")
+  }
+
+  test("a concurrent run writes the same JSONL text as its steps run one at a time") {
+    val (conf, data) = setup()
+    val runs = Workflow.run(spark, conf, registry, new RecordingTransport)
+    val (serialConf, serialData) = setup()
+    // one step per run, in the concurrent run's order: every wave holds one step
+    runs.map(_.name).foreach(n => Workflow.run(spark, only(serialConf, n), registry,
+      new RecordingTransport))
+    def text(dir: String): Seq[String] =
+      spark.read.text(s"$dir/output/knowledge-graph.json").collect().map(_.getString(0)).sorted.toSeq
+    assert(text(data).nonEmpty)
+    assert(text(data) === text(serialData))
+  }
+
+  test("a failing map step fails the run after its siblings finish; a rerun runs it alone") {
+    val (conf, data) = setup()
+    val mapsOnly = only(conf, mapSteps: _*)
+    val boom = new IllegalStateException("genes mapper failed")
+    val thrown = intercept[IllegalStateException] {
+      Workflow.run(spark, mapsOnly, registry + ("genes" -> TabFileMapper(_ => throw boom)))
+    }
+    assert(thrown eq boom)
+    // the siblings in the failed step's wave finished and kept their markers
+    assert(successMarkers(data).map(p => Paths.get(p).getParent.getFileName.toString).sorted ===
+      Seq("gene2protein.parquet", "protein-triples.parquet"))
+
+    val rerun = Workflow.run(spark, mapsOnly, registry)
+    assert(rerun.filterNot(_.skipped).map(_.name) === Seq("s1_map_genes"))
+  }
+
+  test("a job group set on the calling thread is on every job the run starts") {
+    val (conf, _) = setup()
+    val sc = spark.sparkContext
+    sc.setJobGroup("workflow-spec-group", "WorkflowSpec job group")
+    val (runs, jobs) =
+      try recordingJobs(Workflow.run(spark, conf, registry, new RecordingTransport))
+      finally sc.clearJobGroup()
+    assert(jobs.nonEmpty)
+    assert(jobs.forall(_.group.contains("workflow-spec-group")),
+      jobs.filterNot(_.group.contains("workflow-spec-group")).mkString(", "))
+    // and each step's jobs carry its name
+    assert(jobs.flatMap(_.step).toSet === runs.map(_.name).toSet)
   }
 }
