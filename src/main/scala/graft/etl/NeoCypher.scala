@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.model.Graph
@@ -102,10 +102,14 @@ object NeoCypher {
 
   /** Emits one Cypher statement per batch of `batchSize` PG elements of the
     * requested kind ('node' or 'edge'). The element payload is inlined as a
-    * JSON array in place of the `$nodes`/`$edges` parameter. Nodes get
-    * [[CommonNodeLabel]] appended (reference: src/ketl/io/neoloader.py:768-774);
-    * property arrays are shaped by `config` (reference:
-    * src/ketl/io/neoloader.py:779-815 _parse_pg_elem_property).
+    * JSON array in place of the `$nodes`/`$edges` parameter, each element
+    * written by [[PgGraph.elementJson]], the writer JSONL lines use. Nodes
+    * get [[CommonNodeLabel]] appended (reference:
+    * src/ketl/io/neoloader.py:768-774); property arrays are shaped by
+    * `config` (reference: src/ketl/io/neoloader.py:779-815
+    * _parse_pg_elem_property). Property values are inlined as the JSON text
+    * they hold — the one value form of [[PgGraph.toPg]] and
+    * [[PgGraph.fromJsonl]] alike.
     */
   def statements(pg: DataFrame, elementType: String, batchSize: Int = 2500,
                  config: PropertyConfig = PropertyConfig()): Dataset[String] = {
@@ -123,47 +127,22 @@ object NeoCypher {
     val labels = if (isNodes)
       array_union(col("labels"), array(lit(CommonNodeLabel)))
     else col("labels")
-
-    val elemJson = {
-      val q = (c: org.apache.spark.sql.Column) => Triples.jsonSerialize(c)
-      val labelsJson = concat(lit("["), array_join(transform(labels, q), ","), lit("]"))
-      def valueJson(key: org.apache.spark.sql.Column,
-                    arr: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-        val arrJson = concat(lit("["), array_join(arr, ","), lit("]"))
-        def byMode(m: MultiValueMode) = m match {
-          case Multiple => arrJson
-          case Single => when(size(arr) > 1,
-              raise_error(concat(lit("multiple values aren't allowed for property "), key)))
-            .otherwise(element_at(arr, 1))
-          case Auto => when(size(arr) === 1, element_at(arr, 1)).otherwise(arrJson)
-        }
-        config.modes.foldLeft(byMode(config.default)) { case (acc, (k, m)) =>
-          when(key === k, byMode(m)).otherwise(acc)
-        }
+    def values(key: Column, vs: Column): Column = {
+      def byMode(m: MultiValueMode) = m match {
+        case Multiple => PgGraph.jsonArray(vs)
+        case Single => when(size(vs) > 1,
+            raise_error(concat(lit("multiple values aren't allowed for property "), key)))
+          .otherwise(element_at(vs, 1))
+        case Auto => when(size(vs) === 1, element_at(vs, 1)).otherwise(PgGraph.jsonArray(vs))
       }
-      // key-sorted entries: stable statement text run-to-run (the map's
-      // internal order follows nondeterministic collect_list arrival order)
-      val propsJson = concat(lit("{"),
-        array_join(
-          transform(array_sort(map_entries(col("properties"))), e =>
-            concat(q(e.getField("key")), lit(":"),
-              valueJson(e.getField("key"), e.getField("value")))),
-          ","),
-        lit("}"))
-      val base = concat(
-        lit("""{"id":"""), q(col("id")),
-        lit(""","labels":"""), labelsJson,
-        lit(""","properties":"""), propsJson)
-      if (isNodes) concat(base, lit("}"))
-      else concat(base, lit(""","from":"""), q(col("from")),
-        lit(""","to":"""), q(col("to")), lit("}"))
+      PgGraph.perKey(key, config.modes, byMode(config.default))(byMode)
     }
 
     val template = if (isNodes) NodeQueryTemplate else EdgeQueryTemplate
     val param = if (isNodes) "$nodes" else "$edges"
 
     pg.where(col("type") === elementType)
-      .select(elemJson.as("elem"))
+      .select(PgGraph.elementJson(lit(""), labels, lit(!isNodes), values).as("elem"))
       .as[String]
       .mapPartitions { it =>
         it.grouped(batchSize).map { batch =>

@@ -2,6 +2,8 @@ package graft.etl
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -223,20 +225,23 @@ object NeoLoader {
     (attempt - 1).toLong
   }
 
-  private def flagPath(config: Config, suffix: String): Option[java.nio.file.Path] =
-    config.doneBasePath.map { base =>
-      // a base already carrying a phase suffix is normalised, as in the
-      // reference (src/ketl/io/neoloader.py:454-457)
-      val trimmed = base.stripSuffix(".nodes").stripSuffix(".edges")
-      Paths.get(trimmed + "." + suffix)
-    }
+  /** Whether both phases' done-flags exist under the done base path `base`
+    * — a finished load.
+    */
+  private[etl] def loaded(base: String): Boolean =
+    Seq("nodes", "edges").forall(phase => Files.exists(flagPath(base, phase)))
 
-  private def flagExists(config: Config, suffix: String): Boolean =
-    flagPath(config, suffix).exists(Files.exists(_))
+  private def flagPath(base: String, phase: String): java.nio.file.Path =
+    // a base already carrying a phase suffix is normalised, as in the
+    // reference (src/ketl/io/neoloader.py:454-457)
+    Paths.get(base.stripSuffix(".nodes").stripSuffix(".edges") + "." + phase)
 
-  private def writeFlag(config: Config, suffix: String): Unit =
-    flagPath(config, suffix).foreach { p =>
-      Files.writeString(p, s"$suffix loaded on ${java.time.Instant.now()}\n")
+  private def flagExists(config: Config, phase: String): Boolean =
+    config.doneBasePath.exists(b => Files.exists(flagPath(b, phase)))
+
+  private def writeFlag(config: Config, phase: String): Unit =
+    config.doneBasePath.foreach { b =>
+      Files.writeString(flagPath(b, phase), s"$phase loaded on ${java.time.Instant.now()}\n")
     }
 }
 
@@ -245,7 +250,8 @@ object NeoLoader {
   * JSONL.pg source, applies `--no-nodes`/`--no-edges`/`--done-path`
   * /`--batch-size`, and takes loader settings from a [[graft.io.Config]]
   * file (`neoloader.batch_size`, `neoloader.max_retries`,
-  * `neoloader.retry_backoff_ms`). With no database in the container the
+  * `neoloader.retry_backoff_ms`). A missing or malformed option value is a
+  * usage error (exit code 2). With no database in the container the
   * transport is the no-op one; a bolt transport would be selected here from
   * `neo4j.uri` exactly as the reference builds its driver from config.
   */
@@ -262,19 +268,28 @@ object NeoLoaderCli {
     var configPath: Option[String] = None
     var usageError = false
     var i = 0
+    def usage(msg: String): Unit = { System.err.println(msg); usageError = true }
+    // the value of the option at args(i), consuming it
+    def value(opt: String): Option[String] = {
+      i += 1
+      if (i < args.length) Some(args(i)) else { usage(s"$opt needs a value"); None }
+    }
     while (i < args.length && !usageError) {
       args(i) match {
         case "--no-nodes" => doNodes = false
         case "--no-edges" => doEdges = false
-        case "--done-path" => i += 1; donePath = Some(args(i))
-        case "--batch-size" => i += 1; batchSize = Some(args(i).toInt)
-        case "--config" => i += 1; configPath = Some(args(i))
+        case "--done-path" => donePath = value("--done-path")
+        case "--batch-size" => value("--batch-size").foreach { v =>
+            batchSize = v.toIntOption.filter(_ > 0)
+            if (batchSize.isEmpty) usage(s"--batch-size needs a positive integer, got '$v'")
+          }
+        case "--config" => configPath = value("--config")
         case other if !other.startsWith("--") => source = Some(other)
-        case other => System.err.println(s"unknown option $other"); usageError = true
+        case other => usage(s"unknown option $other")
       }
       i += 1
     }
-    if (source.isEmpty) { System.err.println("missing <source>"); usageError = true }
+    if (source.isEmpty) usage("missing <source>")
     if (usageError) 2
     else try {
       val fileConf = configPath.map(p =>
@@ -288,7 +303,7 @@ object NeoLoaderCli {
       println(s"[neoloader] $report")
       0
     } catch {
-      case e: Throwable => System.err.println(s"[neoloader] loading failed: ${e.getMessage}"); 1
+      case NonFatal(e) => System.err.println(s"[neoloader] loading failed: ${e.getMessage}"); 1
     }
   }
 }

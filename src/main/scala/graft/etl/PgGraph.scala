@@ -154,38 +154,43 @@ object PgGraph {
     untouched.unionByName(unset)
   }
 
-  /** Parsed-PG schema as read back from JSONL.pg: property values are the
-    * ACTUAL values (as strings via primitivesAsString), matching what the
-    * reference's loader feeds Neo4j — not the serialised triple form.
+  /** Reads JSONL.pg lines back into PG rows — the missing half of the
+    * JSONL sink, so graft pipelines can also consume graphs produced
+    * elsewhere. Distributed text scan + from_json; nodes get null
+    * endpoints, absent properties become empty maps.
+    *
+    * The frame has the one property-value form [[toPg]] produces: each
+    * value is its JSON text, so a string keeps its quotes and a number,
+    * boolean or nested value keeps its JSON type — as the reference's
+    * loader `json.loads` each line (reference:
+    * src/ketl/io/neoloader.py:291-296). Values are parsed as variants and
+    * re-serialised, so a number's spelling may change (`1.50` reads back
+    * as `1.5`, `100.00` as `100.0`) but not its value or whether it is an
+    * integer. Two cases fall outside that: an integer beyond the 64-bit
+    * range reads back as a float, and a whole-valued float nested inside
+    * an array or object value reads back as an integer.
     */
-  val JsonlSchema: org.apache.spark.sql.types.StructType = {
+  def fromJsonl(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
     import org.apache.spark.sql.types._
-    StructType(Seq(
+    val schema = StructType(Seq(
       StructField("type", StringType), StructField("id", StringType),
       StructField("labels", ArrayType(StringType)),
       StructField("from", StringType), StructField("to", StringType),
-      StructField("properties", MapType(StringType, ArrayType(StringType)))))
-  }
-
-  /** Reads JSONL.pg lines (files or a line DataFrame) back into PG rows —
-    * the missing half of the JSONL sink, so graft pipelines can also
-    * consume graphs produced elsewhere. Distributed text scan + from_json;
-    * nodes get null endpoints, absent properties become empty maps.
-    *
-    * Note the same representational collapse the reference's loader has
-    * (reference: src/ketl/io/neoloader.py:291-296 — parsed values go to the
-    * database as-is): a JSON string "0.75" and the number 0.75 both land as
-    * the string "0.75" here.
-    */
-  def fromJsonl(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    parseJsonl(spark.read.text(path).withColumnRenamed("value", "line"))
-
-  def parseJsonl(lines: DataFrame): DataFrame =
-    lines.select(from_json(col("line"), JsonlSchema,
-        Map("primitivesAsString" -> "true")).as("pg"))
+      StructField("properties", MapType(StringType, ArrayType(VariantType)))))
+    // the parser stores a float literal as its narrowest decimal, so 1.0
+    // and 100.00 print as integers unless given back their fraction
+    def valueJson(v: Column): Column = {
+      val json = to_json(v)
+      when(schema_of_variant(v).startsWith("DECIMAL") && !json.contains("."),
+        concat(json, lit(".0"))).otherwise(json)
+    }
+    spark.read.text(path)
+      .select(from_json(col("value"), schema).as("pg"))
       .select(col("pg.type"), col("pg.id"), col("pg.labels"),
         col("pg.from"), col("pg.to"),
-        coalesce(col("pg.properties"), map()).as("properties"))
+        coalesce(transform_values(col("pg.properties"),
+          (_, vs) => transform(vs, valueJson _)), map()).as("properties"))
+  }
 
   /** Validates PG rows against the graph invariants the reference lists as
     * its pending validations (reference: src/ketl/io/core.py:115-118 TODO):
@@ -208,7 +213,8 @@ object PgGraph {
   /** PG DataFrame → JSONL.pg lines (reference: src/ketl/io/core.py:130-191
     * pg_df_2_pg_jsonl). The reference serialises on the driver via
     * `toLocalIterator` — a non-starter at scale; here each line is built
-    * distributively.
+    * distributively by [[elementJson]], the same writer Cypher statements
+    * use, led by the element's `type`.
     *
     * Property values are already JSON representations, so by default each is
     * inlined verbatim (a `to_json` over the struct would double-encode
@@ -219,37 +225,45 @@ object PgGraph {
     * reference's dict layout: type, id, labels, properties[, from, to].
     */
   def toJsonl(pg: DataFrame,
-              converters: Map[String, Column => Column] = Map.empty): DataFrame = {
+              converters: Map[String, Column => Column] = Map.empty): DataFrame =
+    pg.select(elementJson(
+      concat(lit(""""type":"""), Triples.jsonSerialize(col("type")), lit(",")),
+      col("labels"), col("type") === Graph.EdgeType,
+      (key, vs) => jsonArray(transform(vs, v => perKey(key, converters, v)(_(v)))))
+      .as("line"))
+
+  /** The one JSON encoding of a PG element, shared by [[toJsonl]] and
+    * [[NeoCypher.statements]]:
+    * `{<lead>"id":…,"labels":[…],"properties":{…}}`, with `,"from":…,"to":…`
+    * before the closing brace where `isEdge` holds. `lead` is empty or a
+    * run of fields ending in a comma; `values(key, vs)` renders one
+    * property's value array. Entries are key-sorted: the map's internal
+    * order follows collect_list arrival order (nondeterministic under
+    * shuffle), and sorting makes the text stable run-to-run.
+    */
+  private[etl] def elementJson(lead: Column, labels: Column, isEdge: Column,
+                               values: (Column, Column) => Column): Column = {
     val q = (c: Column) => Triples.jsonSerialize(c) // JSON-quote a raw string
-    val labelsJson = concat(lit("["),
-      array_join(transform(col("labels"), q), ","), lit("]"))
-    def valueJson(key: Column, v: Column): Column =
-      converters.foldLeft(v) { case (acc, (k, conv)) =>
-        when(key === k, conv(v)).otherwise(acc)
-      }
-    // entries key-sorted: the map's internal order follows collect_list
-    // arrival order (nondeterministic under shuffle); sorting makes the
-    // serialised text stable run-to-run
-    val propsJson = concat(lit("{"),
-      array_join(
-        transform(array_sort(map_entries(col("properties"))), e =>
-          concat(q(e.getField("key")), lit(":["),
-            array_join(transform(e.getField("value"),
-              v => valueJson(e.getField("key"), v)), ","),
-            lit("]"))),
-        ","),
-      lit("}"))
-    val base = concat(
-      lit("""{"type":"""), q(col("type")),
-      lit(""","id":"""), q(col("id")),
-      lit(""","labels":"""), labelsJson,
-      lit(""","properties":"""), propsJson)
-    val line = when(col("type") === Graph.EdgeType,
-        concat(base, lit(""","from":"""), q(col("from")),
-          lit(""","to":"""), q(col("to")), lit("}")))
-      .otherwise(concat(base, lit("}")))
-    pg.select(line.as("line"))
+    val props = transform(array_sort(map_entries(col("properties"))), e =>
+      concat(q(e.getField("key")), lit(":"), values(e.getField("key"), e.getField("value"))))
+    val endpoints = when(isEdge,
+        concat(lit(""","from":"""), q(col("from")), lit(""","to":"""), q(col("to"))))
+      .otherwise(lit(""))
+    concat(lit("{"), lead, lit(""""id":"""), q(col("id")),
+      lit(""","labels":"""), jsonArray(transform(labels, q)),
+      lit(""","properties":{"""), array_join(props, ","), lit("}"), endpoints, lit("}"))
   }
+
+  /** `[v,…]` from an array of JSON fragments. */
+  private[etl] def jsonArray(vs: Column): Column =
+    concat(lit("["), array_join(vs, ","), lit("]"))
+
+  /** `default`, or `f(overrides(k))` where `key` is `k` — the per-property
+    * override of JSONL converters and Cypher multi-value modes.
+    */
+  private[etl] def perKey[A](key: Column, overrides: Map[String, A], default: Column)
+                            (f: A => Column): Column =
+    overrides.foldLeft(default) { case (acc, (k, a)) => when(key === k, f(a)).otherwise(acc) }
 
   /** Writes the JSONL.pg text, optionally compressed — the reference's own
     * TODO (src/ketl/io/core.py: JSONL compression options). `codec` is any

@@ -182,11 +182,8 @@ object Workflow {
     // satisfy on existence as before.
     val produced: Map[String, Step] =
       pending.map(s => Checkpoint.basePath(s.output) -> s).toMap
-    def satisfied(path: String): Boolean = produced.get(Checkpoint.basePath(path)) match {
-      case Some(p) if p.kind == "load" => loadDone(p.output)
-      case Some(_) => checkpointDone(path)
-      case None => available(path)
-    }
+    def satisfied(path: String): Boolean =
+      produced.get(Checkpoint.basePath(path)).fold(available(path))(outputDone)
     val runs = Seq.newBuilder[StepRun]
     while (pending.nonEmpty) {
       val (ready, blocked) = pending.partition(_.inputs.forall(satisfied))
@@ -213,13 +210,12 @@ object Workflow {
     Files.exists(Paths.get(path)) || Files.exists(Paths.get(Checkpoint.checkPath(base)))
   }
 
-  private def checkpointDone(path: String): Boolean =
-    Files.exists(Paths.get(Checkpoint.checkPath(Checkpoint.basePath(path))))
-
-  private def loadDone(doneBase: String): Boolean = {
-    val trimmed = doneBase.stripSuffix(".nodes").stripSuffix(".edges")
-    Files.exists(Paths.get(trimmed + ".nodes")) && Files.exists(Paths.get(trimmed + ".edges"))
-  }
+  /** A step's output is done when its checkpoint carries `_SUCCESS`, or,
+    * for a load step, when both phase done-flags exist.
+    */
+  private def outputDone(step: Step): Boolean =
+    if (step.kind == "load") NeoLoader.loaded(step.output)
+    else Files.exists(Paths.get(Checkpoint.checkPath(Checkpoint.basePath(step.output))))
 
   private val Kinds = Set("map", "pg", "jsonl", "load")
 
@@ -255,45 +251,27 @@ object Workflow {
   }
 
   private def exec(spark: SparkSession, step: Step, mapperOf: Map[String, TabFileMapper],
-                   transport: NeoLoader.CypherTransport): StepRun = step.kind match {
-    case "map" =>
+                   transport: NeoLoader.CypherTransport): StepRun = {
+    val skipped = outputDone(step)
+    if (!skipped) {
       val out = Checkpoint.basePath(step.output)
-      if (checkpointDone(out)) StepRun(step.name, "map", skipped = true)
-      else {
-        mapperOf(step.name).map(spark, step.inputs.head, outPath = Some(out))
-        StepRun(step.name, "map", skipped = false)
+      step.kind match {
+        case "map" =>
+          mapperOf(step.name).map(spark, step.inputs.head, outPath = Some(out))
+        case "pg" =>
+          val triples = DataFrames.unionAllByName(Bounded.map(step.inputs,
+            spark.sparkContext.defaultParallelism)(Checkpoint.load(spark, _)))
+          Checkpoint.save(PgGraph.toPg(triples), out)
+        case "jsonl" =>
+          PgGraph.writeJsonl(Checkpoint.load(spark, step.inputs.head), out,
+            codec = step.conf.get("codec"))
+        case "load" =>
+          val cfg = NeoLoader.Config(
+            batchSize = step.conf.get("batch_size").map(_.toInt).getOrElse(2500),
+            doneBasePath = Some(step.output))
+          NeoLoader.load(PgGraph.fromJsonl(spark, step.inputs.head), transport, cfg)
       }
-
-    case "pg" =>
-      val out = Checkpoint.basePath(step.output)
-      if (checkpointDone(out)) StepRun(step.name, "pg", skipped = true)
-      else {
-        val triples = DataFrames.unionAllByName(Bounded.map(step.inputs,
-          spark.sparkContext.defaultParallelism)(Checkpoint.load(spark, _)))
-        Checkpoint.save(PgGraph.toPg(triples), out)
-        StepRun(step.name, "pg", skipped = false)
-      }
-
-    case "jsonl" =>
-      val out = Checkpoint.basePath(step.output)
-      if (checkpointDone(out)) StepRun(step.name, "jsonl", skipped = true)
-      else {
-        PgGraph.writeJsonl(Checkpoint.load(spark, step.inputs.head), out,
-          codec = step.conf.get("codec"))
-        StepRun(step.name, "jsonl", skipped = false)
-      }
-
-    case "load" =>
-      val doneBase = step.output
-      if (loadDone(doneBase)) StepRun(step.name, "load", skipped = true)
-      else {
-        val cfg = NeoLoader.Config(
-          batchSize = step.conf.get("batch_size").map(_.toInt).getOrElse(2500),
-          doneBasePath = Some(doneBase))
-        val report = NeoLoader.load(
-          PgGraph.fromJsonl(spark, step.inputs.head), transport, cfg)
-        StepRun(step.name, "load",
-          skipped = report.nodesSkipped && report.edgesSkipped)
-      }
+    }
+    StepRun(step.name, step.kind, skipped)
   }
 }

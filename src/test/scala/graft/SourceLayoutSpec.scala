@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Keeps the main source tree's entry points in one shape: sessions come
   * from [[Session.local]] (or the user-configured
   * [[graft.io.Config.sparkSession]]), thread pools from [[Bounded.map]],
-  * and every main that ships is named in README's tool list, which names
-  * no other.
+  * PG element JSON from the one writer in [[graft.etl.PgGraph]], and
+  * every main that ships is named in README's tool list, which names no
+  * other.
   */
 class SourceLayoutSpec extends AnyFunSuite {
 
@@ -34,6 +35,14 @@ class SourceLayoutSpec extends AnyFunSuite {
       case (p, src) if """\bExecutors\b""".r.findFirstIn(src).isDefined => p.toString
     }.sorted
     assert(sites === Seq("graft/Bounded.scala"))
+  }
+
+  test("PG elements have one JSON writer and one property-value form") {
+    val writers = sources.collect {
+      case (p, src) if src.contains("""map_entries(col("properties"))""") => p.toString
+    }
+    assert(writers === Seq("graft/etl/PgGraph.scala"))
+    assert(sources.filter(_._2.contains("primitivesAsString")).map(_._1.toString) === Seq.empty)
   }
 
   test("README's tool list names exactly the mains that ship") {

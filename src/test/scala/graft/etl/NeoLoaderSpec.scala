@@ -197,6 +197,56 @@ class NeoLoaderSpec extends SparkSpec {
     assert(Files.exists(dir.resolve("done.nodes")))
     assert(Files.exists(dir.resolve("done.edges")))
     assert(NeoLoaderCli.run(Array.empty, new RecordingTransport) === 2) // no source
+    // a missing or malformed option value is a usage error, not a crash
+    for (bad <- Seq(Seq("--done-path"), Seq("--batch-size"), Seq("--config"),
+        Seq("--batch-size", "x"), Seq("--batch-size", "0")))
+      assert(NeoLoaderCli.run((jsonl +: bad).toArray, new RecordingTransport) === 2,
+        bad.mkString(" "))
+  }
+
+  test("the JSONL load path sends each value with its JSON type, as Cypher over toPg does") {
+    val typed = Seq(
+      ("N1", Graph.TypeKey, "Person"),
+      ("N1", "name", "\"Smith, \\\"Al\\\"\""), // a comma and quotes
+      ("N1", "code", "\"2020\""),                 // a numeric-looking string
+      ("N1", "born", "\"1995-03-15\""),           // a date string
+      ("N1", "age", "30"), ("N1", "active", "true"),
+      ("N1", "tag", "\"a\""), ("N1", "tag", "\"b\""), // multi-valued
+      ("N2", Graph.TypeKey, "Person"), ("N2", "score", "0.75"),
+      ("N2", "ratio", "1.0"), ("N2", "price", "100.00"), // whole-valued floats
+      ("E1", Graph.FromKey, "N1"), ("E1", Graph.ToKey, "N2"),
+      ("E1", Graph.TypeKey, "knows"), ("E1", "since", "\"2020\"")
+    ).toDF("id", "key", "value")
+    val pg = PgGraph.toPg(typed)
+    val jsonl = Files.createTempDirectory("neopayload").resolve("kg.jsonl").toString
+    PgGraph.writeJsonl(pg, jsonl)
+    RecordingTransport.reset(failFirst = 0)
+    NeoLoader.load(PgGraph.fromJsonl(spark, jsonl), new RecordingTransport,
+      NeoLoader.Config(batchSize = 10))
+
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    // every UNWIND payload parses as JSON; elements keyed by id
+    def elements(stmts: Seq[String]): Map[String, com.fasterxml.jackson.databind.JsonNode] =
+      stmts.filter(_.startsWith("UNWIND ")).flatMap { stmt =>
+        val payload = stmt.linesIterator.next().stripPrefix("UNWIND ")
+          .stripSuffix(" AS node_js").stripSuffix(" AS edge_js")
+        import scala.jdk.CollectionConverters._
+        mapper.readTree(payload).elements().asScala.map(e => e.get("id").asText() -> e)
+      }.toMap
+    val loaded = elements(RecordingTransport.snapshot)
+    val expected = elements(NeoCypher.statements(pg, Graph.NodeType).collect().toSeq ++
+      NeoCypher.statements(pg, Graph.EdgeType).collect())
+    assert(loaded.keySet === Set("N1", "N2", "E1"))
+    assert(loaded === expected)
+    val n1 = loaded("N1").get("properties")
+    assert(n1.get("name").asText() === "Smith, \"Al\"")
+    assert(n1.get("code").isTextual && n1.get("code").asText() === "2020")
+    assert(n1.get("born").asText() === "1995-03-15")
+    assert(n1.get("age").isInt && n1.get("active").isBoolean)
+    assert(n1.get("tag").isArray && n1.get("tag").size() === 2)
+    assert(loaded("N2").get("properties").get("ratio").isDouble)
+    assert(loaded("N2").get("properties").get("price").isDouble)
+    assert(loaded("E1").get("properties").get("since").isTextual)
   }
 }
 

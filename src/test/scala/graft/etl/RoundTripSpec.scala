@@ -64,9 +64,27 @@ class RoundTripSpec extends SparkSpec {
     assert(row.getAs[String]("type") === Graph.NodeType)
     assert(row.getAs[scala.collection.Seq[String]]("labels") === Seq("Nation"))
     val props = row.getAs[Map[String, scala.collection.Seq[String]]]("properties")
-    assert(props("hasName").head === "NATION_0")  // unserialised value
-    assert(props("region").head === "0")          // number read as string
+    assert(props("hasName").head === "\"NATION_0\"") // JSON text, as toPg keeps it
+    assert(props("region").head === "0")
     assert(row.isNullAt(row.fieldIndex("from")))
+  }
+
+  test("JSONL written from the read-back graph is byte-identical") {
+    val nation = (0 until 25).map(k => (k, s"NATION_$k", k % 5))
+      .toDF("n_nationkey", "n_name", "n_regionkey")
+    val triples = Triples.chain(
+      Triples.nodes(nation, Triples.wrap(col("n_nationkey"), "nation:"),
+        Seq(Prop.column("n_name", "hasName"), Prop.column("n_regionkey", "region"),
+          Prop.tpe("Nation"))),
+      Triples.edges(nation, "inRegion",
+        Triples.wrap(col("n_nationkey"), "nation:"),
+        Triples.wrap(col("n_regionkey"), "region:"),
+        props = Seq(Prop.column("n_name", "nationName"))))
+    val dir = java.nio.file.Files.createTempDirectory("graft-jsonl").toString + "/out"
+    PgGraph.writeJsonl(PgGraph.toPg(triples), dir)
+    val written = spark.read.text(dir).as[String].collect().sorted
+    assert(written.length === 50)
+    assert(PgGraph.toJsonl(PgGraph.fromJsonl(spark, dir)).as[String].collect().sorted === written)
   }
 
   test("compressed JSONL round-trips through every codec (reference TODO)") {
