@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.model.Graph
@@ -124,25 +124,18 @@ object NeoCypher {
                            config: PropertyConfig = PropertyConfig()): Dataset[(String, Int)] = {
     import pg.sparkSession.implicits._
     val isNodes = elementType == Graph.NodeType
-    val labels = if (isNodes)
-      array_union(col("labels"), array(lit(CommonNodeLabel)))
-    else col("labels")
-    def values(key: Column, vs: Column): Column = {
-      def byMode(m: MultiValueMode) = m match {
-        case Multiple => PgGraph.jsonArray(vs)
-        case Single => when(size(vs) > 1,
-            raise_error(concat(lit("multiple values aren't allowed for property "), key)))
-          .otherwise(element_at(vs, 1))
-        case Auto => when(size(vs) === 1, element_at(vs, 1)).otherwise(PgGraph.jsonArray(vs))
-      }
-      PgGraph.perKey(key, config.modes, byMode(config.default))(byMode)
+    def mode(m: MultiValueMode): String = m match {
+      case Multiple => "array"
+      case Single => "single"
+      case Auto => "auto"
     }
-
     val template = if (isNodes) NodeQueryTemplate else EdgeQueryTemplate
     val param = if (isNodes) "$nodes" else "$edges"
 
     pg.where(col("type") === elementType)
-      .select(PgGraph.elementJson(lit(""), labels, lit(!isNodes), values).as("elem"))
+      .select(PgGraph.elementJson(pg.sparkSession, None, col("properties"), lit(!isNodes),
+        extraLabel = if (isNodes) Some(CommonNodeLabel) else None,
+        mode(config.default), config.modes.map { case (k, m) => k -> mode(m) }).as("elem"))
       .as[String]
       .mapPartitions { it =>
         it.grouped(batchSize).map { batch =>

@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions
 import graft.model.Graph
 
 /** Triples → PG-format DataFrame (reference: src/ketl/io/core.py:16-127
@@ -12,43 +13,30 @@ import graft.model.Graph
   * and re-joins them on id — four shuffles plus three joins. Here the whole
   * element is assembled in ONE `groupBy("id")` (single exchange): the
   * key/value pairs of an element are collected once, and labels / endpoints /
-  * property map are carved out of that array with higher-order functions —
-  * per-element work, no further shuffle. Property counts per element are
-  * bounded by the mapper configuration, so the collected array is small and
-  * map-side partial aggregation keeps the shuffle compact. At 100 TB this is
-  * one hash-exchange on `id` instead of four.
+  * property map are carved out of that array in one pass of the native
+  * expression `graft_pg_assemble` ([[graft.functions.PgAssemble]]) —
+  * per-element work, no further shuffle, no interpreted lambda. Property
+  * counts per element are bounded by the mapper configuration, so the
+  * collected array is small and map-side partial aggregation keeps the
+  * shuffle compact. At 100 TB this is one hash-exchange on `id` instead of
+  * four.
   *
   * Output columns: type ('node'|'edge'), id, labels (sorted string array),
   * from, to (null for nodes), properties (map key → sorted distinct values,
-  * values still JSON-serialised; defaults to empty map).
+  * values still JSON-serialised; keys in order of first appearance;
+  * defaults to empty map).
   */
 object PgGraph {
 
   def toPg(triples: DataFrame): DataFrame = {
-    val kvs = col("kvs")
-    def ofKey(key: String): Column = filter(kvs, kv => kv.getField("key") === key)
-    def firstOf(key: String): Column = {
-      val f = ofKey(key)
-      when(size(f) > 0, element_at(f, 1).getField("value"))
-    }
-    val propKvs = filter(kvs, kv => !kv.getField("key").isin(Graph.SpecialKeys.toSeq: _*))
-    val propKeys = array_distinct(transform(propKvs, kv => kv.getField("key")))
-
+    GraftFunctions.register(triples.sparkSession)
+    // one call per field: subexpression elimination evaluates it once
+    val element = call_function("graft_pg_assemble", col("kvs"))
     triples
       .groupBy("id")
       .agg(collect_list(struct(col("key"), col("value"))).as("kvs"))
-      .select(
-        col("id"),
-        array_sort(array_distinct(transform(ofKey(Graph.TypeKey), kv => kv.getField("value")))).as("labels"),
-        firstOf(Graph.FromKey).as("from"),
-        firstOf(Graph.ToKey).as("to"),
-        map_from_arrays(
-          propKeys,
-          transform(propKeys, k =>
-            array_sort(array_distinct(transform(
-              filter(propKvs, kv => kv.getField("key") === k),
-              kv => kv.getField("value"))))))
-          .as("properties"))
+      .select(col("id") +: Seq("labels", "from", "to", "properties")
+        .map(f => element.getField(f).as(f)): _*)
       .withColumn("type",
         when(col("from").isNotNull, lit(Graph.EdgeType)).otherwise(lit(Graph.NodeType)))
       .select("type", "id", "labels", "from", "to", "properties")
@@ -225,45 +213,35 @@ object PgGraph {
     * reference's dict layout: type, id, labels, properties[, from, to].
     */
   def toJsonl(pg: DataFrame,
-              converters: Map[String, Column => Column] = Map.empty): DataFrame =
-    pg.select(elementJson(
-      concat(lit(""""type":"""), Triples.jsonSerialize(col("type")), lit(",")),
-      col("labels"), col("type") === Graph.EdgeType,
-      (key, vs) => jsonArray(transform(vs, v => perKey(key, converters, v)(_(v)))))
-      .as("line"))
-
-  /** The one JSON encoding of a PG element, shared by [[toJsonl]] and
-    * [[NeoCypher.statements]]:
-    * `{<lead>"id":…,"labels":[…],"properties":{…}}`, with `,"from":…,"to":…`
-    * before the closing brace where `isEdge` holds. `lead` is empty or a
-    * run of fields ending in a comma; `values(key, vs)` renders one
-    * property's value array. Entries are key-sorted: the map's internal
-    * order follows collect_list arrival order (nondeterministic under
-    * shuffle), and sorting makes the text stable run-to-run.
-    */
-  private[etl] def elementJson(lead: Column, labels: Column, isEdge: Column,
-                               values: (Column, Column) => Column): Column = {
-    val q = (c: Column) => Triples.jsonSerialize(c) // JSON-quote a raw string
-    val props = transform(array_sort(map_entries(col("properties"))), e =>
-      concat(q(e.getField("key")), lit(":"), values(e.getField("key"), e.getField("value"))))
-    val endpoints = when(isEdge,
-        concat(lit(""","from":"""), q(col("from")), lit(""","to":"""), q(col("to"))))
-      .otherwise(lit(""))
-    concat(lit("{"), lead, lit(""""id":"""), q(col("id")),
-      lit(""","labels":"""), jsonArray(transform(labels, q)),
-      lit(""","properties":{"""), array_join(props, ","), lit("}"), endpoints, lit("}"))
+              converters: Map[String, Column => Column] = Map.empty): DataFrame = {
+    val props = if (converters.isEmpty) col("properties")
+      else transform_values(col("properties"), (key, vs) => converters.foldLeft(vs) {
+        case (acc, (k, f)) => when(key === k, transform(vs, f)).otherwise(acc)
+      })
+    pg.select(elementJson(pg.sparkSession, Some(col("type")), props, col("type") === Graph.EdgeType,
+      extraLabel = None, defaultMode = "array").as("line"))
   }
 
-  /** `[v,…]` from an array of JSON fragments. */
-  private[etl] def jsonArray(vs: Column): Column =
-    concat(lit("["), array_join(vs, ","), lit("]"))
-
-  /** `default`, or `f(overrides(k))` where `key` is `k` — the per-property
-    * override of JSONL converters and Cypher multi-value modes.
+  /** The one JSON encoding of a PG element, shared by [[toJsonl]] and
+    * [[NeoCypher.statements]]: the native `graft_pg_element_json`
+    * ([[graft.functions.PgElementJson]]) over `id`, `labels`, `from` and
+    * `to`. `tpe`, when given, leads the element as a `"type"` field;
+    * `isEdge` adds the endpoints; `extraLabel` is appended to the distinct
+    * labels; `defaultMode` and `modes` (`array`, `auto` or `single`) shape
+    * each property's value array. Entries are key-sorted: the map's
+    * internal order follows collect_list arrival order (nondeterministic
+    * under shuffle), and sorting makes the text stable run-to-run.
     */
-  private[etl] def perKey[A](key: Column, overrides: Map[String, A], default: Column)
-                            (f: A => Column): Column =
-    overrides.foldLeft(default) { case (acc, (k, a)) => when(key === k, f(a)).otherwise(acc) }
+  private[etl] def elementJson(spark: org.apache.spark.sql.SparkSession, tpe: Option[Column],
+                               props: Column, isEdge: Column, extraLabel: Option[String],
+                               defaultMode: String,
+                               modes: Map[String, String] = Map.empty): Column = {
+    GraftFunctions.register(spark)
+    call_function("graft_pg_element_json",
+      tpe.getOrElse(lit(null).cast("string")), col("id"), col("labels"),
+      col("from"), col("to"), props, isEdge, lit(tpe.isDefined),
+      lit(extraLabel.orNull).cast("string"), lit(defaultMode), typedlit(modes))
+  }
 
   /** Writes the JSONL.pg text, optionally compressed — the reference's own
     * TODO (src/ketl/io/core.py: JSONL compression options). `codec` is any

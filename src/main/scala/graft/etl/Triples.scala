@@ -44,7 +44,8 @@ object Prop {
   *
   * The reference iterates rows in Python via `mapInPandas`
   * (reference: src/ketl/tabmap/core.py:301-369). Here each mapper compiles to
-  * `explode(filter(array(struct(key,value)…)))` over pure Column expressions:
+  * `explode(array(struct(key,value)…))`, null values filtered out after it,
+  * over pure Column expressions:
   * one narrow, whole-stage-codegen stage, no shuffle, column pruning and
   * filter pushdown reach the scan for free. At 100 TB this is a linear map
   * over input splits with zero exchange.
@@ -128,7 +129,8 @@ object Triples {
     }
     df.select(id.as("id"), array(entries: _*).as("kvs"))
       .where(col("id").isNotNull && col("id") =!= "")
-      .select(col("id"), explode(filter(col("kvs"), kv => kv.getField("value").isNotNull)).as("kv"))
+      .select(col("id"), explode(col("kvs")).as("kv"))
+      .where(col("kv.value").isNotNull)
       .select(col("id"), col("kv.key").as("key"), col("kv.value").as("value"))
   }
 }

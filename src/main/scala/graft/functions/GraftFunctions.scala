@@ -81,6 +81,20 @@ object GraftFunctions {
         numHashes = exprs(3).eval().asInstanceOf[Int])
     },
     "graft_normalize_text" -> { exprs => NormalizeText(exprs(0)) },
+    "graft_pg_assemble" -> { exprs => PgAssemble(exprs(0)) },
+    "graft_pg_element_json" -> { exprs =>
+      // (type, id, labels, from, to, properties, isEdge, withType,
+      //  extraLabel, defaultMode, modes) — the last four are literals
+      val modes = exprs(10).eval().asInstanceOf[org.apache.spark.sql.catalyst.util.MapData]
+      val keys = modes.keyArray()
+      val values = modes.valueArray()
+      PgElementJson(exprs.take(7),
+        withType = exprs(7).eval().asInstanceOf[Boolean],
+        extraLabel = Option(exprs(8).eval()).map(_.toString).orNull,
+        defaultMode = exprs(9).eval().toString,
+        modes = (0 until modes.numElements())
+          .map(i => keys.getUTF8String(i).toString -> values.getUTF8String(i).toString).toMap)
+    },
     "graft_trigram_best" -> { exprs =>
       import org.apache.spark.sql.catalyst.util.ArrayData
       def strs(a: ArrayData): Seq[String] =

@@ -1,16 +1,29 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec, ShuffleExchangeLike}
 
 /** Workflow-checkpoint save/load (reference: src/ketl/spark/utils.py:31-142).
   *
   * The reference estimates DataFrame size by sampling the RDD with Python
   * `sys.getsizeof` and repartitions to ~256 MB files — an extra job over the
-  * data before every save. Here sizing is delegated to the engine: the
-  * optimised plan's statistics (already maintained by Catalyst, zero extra
-  * passes) cap the partition count, so a small output lands in few files
-  * without scanning the data twice. A frame with fewer partitions than
-  * its size calls for is written as it is partitioned, not shuffled up.
+  * data before every save. Here sizing is delegated to the engine and
+  * decided from the plan alone, without running a job:
+  *
+  *   - a frame whose final stage reads only shuffle output (an aggregate
+  *     such as `PgGraph.toPg`, a shuffled join) is written as the shuffle
+  *     leaves it: AQE coalesces its partitions towards the advisory size,
+  *     and there are never more files than shuffle partitions. A
+  *     `coalesce` there would pull the whole post-shuffle stage into as
+  *     few tasks as files;
+  *   - any other frame — a scan, or a union of a scan and a shuffle — has
+  *     its partition count capped by `coalesce` at the optimised plan's
+  *     size estimate ÷ [[TargetPartitionBytes]] (Catalyst's statistics,
+  *     zero extra passes), so a small output lands in few files. A frame
+  *     with fewer partitions than its size calls for is written as it is
+  *     partitioned, not shuffled up.
   */
 object Checkpoint {
 
@@ -28,19 +41,42 @@ object Checkpoint {
     if (path != null && path.endsWith("/_SUCCESS")) path.dropRight("/_SUCCESS".length)
     else path
 
+  /** True when every input of the plan's final stage is a shuffle with at
+    * most `spark.sql.shuffle.partitions` partitions. Read from the physical
+    * plan before execution (AQE's initial plan), so no job runs; broadcast
+    * inputs are built by jobs of their own and do not count.
+    */
+  private def readsOnlyShuffle(df: DataFrame): Boolean = {
+    val maxParts = df.sparkSession.sessionState.conf.numShufflePartitions
+    def inputs(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => inputs(a.initialPlan)
+      case s: ShuffleExchangeLike => Seq(s)
+      case _: BroadcastExchangeLike => Seq.empty
+      case r: ReusedExchangeExec => inputs(r.child)
+      case leaf if leaf.children.isEmpty => Seq(leaf)
+      case other => other.children.flatMap(inputs)
+    }
+    val in = inputs(df.queryExecution.executedPlan)
+    in.nonEmpty && in.forall {
+      case s: ShuffleExchangeLike => s.numPartitions <= maxParts
+      case _ => false
+    }
+  }
+
   /** Caps the partition count at the optimised plan's size estimate ÷
-    * [[TargetPartitionBytes]]. The cap is a `coalesce`, so a frame already
-    * at or below the target count keeps its own partitioning and the plan
-    * runs once, inside the write: asking for the current partition count
-    * first would execute every shuffle-map stage of an adaptive plan
-    * before the write ran them again. Catalyst reports
+    * [[TargetPartitionBytes]], unless the final stage reads only shuffle
+    * output (see the object's doc). The cap is a `coalesce`, so a frame
+    * already at or below the target count keeps its own partitioning and
+    * the plan runs once, inside the write: asking for the current
+    * partition count first would execute every shuffle-map stage of an
+    * adaptive plan before the write ran them again. Catalyst reports
     * `sizeInBytes = spark.sql.defaultSizeInBytes` (≈ Long.MaxValue) for
     * unsized sources — "size unknown" — so such frames are left as they
     * are.
     */
   private def sizedForWrite(df: DataFrame): DataFrame = {
     val estBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (estBytes >= BigInt(Long.MaxValue) / 2) df
+    if (estBytes >= BigInt(Long.MaxValue) / 2 || readsOnlyShuffle(df)) df
     else {
       val target = BigInt(TargetPartitionBytes)
       val wanted = ((estBytes + target - 1) / target).max(1)
@@ -49,11 +85,11 @@ object Checkpoint {
     }
   }
 
-  /** Saves a checkpoint as parquet in at most one file per
-    * [[TargetPartitionBytes]] of the optimised plan's size estimate
-    * (reference behaviour: src/ketl/spark/utils.py:31 df_save). A frame
-    * already at or below that count keeps its own partitioning. Returns
-    * the frame as written.
+  /** Saves a checkpoint as parquet, sized as the object's doc says
+    * (reference behaviour: src/ketl/spark/utils.py:31 df_save): a
+    * post-shuffle frame in at most one file per shuffle partition, any
+    * other in at most one file per [[TargetPartitionBytes]] of the
+    * optimised plan's size estimate. Returns the frame as written.
     */
   def save(df: DataFrame, path: String): DataFrame = {
     val out = sizedForWrite(df)

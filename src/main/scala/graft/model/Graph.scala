@@ -41,13 +41,4 @@ object Graph {
   /** PG-element types (reference: src/ketl/core.py:86-89). */
   val NodeType = "node"
   val EdgeType = "edge"
-
-  /** Builds the canonical composite edge id `type:from-to`
-    * (reference: src/ketl/tabmap/helpers.py:166-176).
-    */
-  def edgeId(edgeType: String, fromId: String, toId: String): String = {
-    require(edgeType.nonEmpty && fromId.nonEmpty && toId.nonEmpty,
-      s"""Cannot build edge ID from empty type/from/to ("$edgeType", "$fromId", "$toId")""")
-    s"$edgeType:$fromId-$toId"
-  }
 }

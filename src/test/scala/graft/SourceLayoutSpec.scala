@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Keeps the main source tree's entry points in one shape: sessions come
   * from [[Session.local]] (or the user-configured
   * [[graft.io.Config.sparkSession]]), thread pools from [[Bounded.map]],
-  * PG element JSON from the one writer in [[graft.etl.PgGraph]], and
+  * PG element JSON from the one native writer that [[graft.etl.PgGraph]]
+  * calls, and
   * every main that ships is named in README's tool list, which names no
   * other.
   */
@@ -39,9 +40,12 @@ class SourceLayoutSpec extends AnyFunSuite {
 
   test("PG elements have one JSON writer and one property-value form") {
     val writers = sources.collect {
-      case (p, src) if src.contains("""map_entries(col("properties"))""") => p.toString
+      case (p, src) if src.contains("""call_function("graft_pg_element_json"""") => p.toString
     }
     assert(writers === Seq("graft/etl/PgGraph.scala"))
+    // no Column-built writer beside the native one
+    assert(sources.filter(_._2.contains("""map_entries(col("properties"))""")).map(_._1.toString) ===
+      Seq.empty)
     assert(sources.filter(_._2.contains("primitivesAsString")).map(_._1.toString) === Seq.empty)
   }
 

@@ -137,34 +137,69 @@ class IoSpec extends SparkSpec {
     assert(Checkpoint.loadAs(spark, s"$base/o.orc", "orc").count() === 100)
   }
 
-  test("checkpoint save runs its plan once: the shuffle is written once, into one part file") {
+  /** Runs `write` into a fresh directory under a listener; returns its jobs,
+    * shuffle bytes written, part files and the task count of its last stage.
+    */
+  private def measure(write: String => Unit): (Int, Long, Int, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
+    val lastStageTasks = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics).foreach(m =>
+          shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+      override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        lastStageTasks.set(sc.stageInfo.numTasks)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-once").resolve("out.parquet")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      write(dir.toString)
+      org.apache.spark.ListenerBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val parts = dir.toFile.list().count(_.startsWith("part-"))
+    (jobs.get(), shuffleBytes.get(), parts, lastStageTasks.get())
+  }
+
+  private def grouped = spark.range(20000).groupBy((col("id") % 97).as("k")).agg(sum("id").as("s"))
+
+  /** Runs `f` with AQE's partition coalescing off, so every shuffle
+    * partition of a small fixture stays its own task.
+    */
+  private def uncoalesced[A](f: => A): A = {
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try f finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("checkpoint save runs its plan once: the shuffle is written once, into at most shuffle-partitions part files") {
     // under AQE, asking a frame for its partition count executes every
     // shuffle-map stage, and the write then executes them again
-    def grouped = spark.range(20000).groupBy((col("id") % 97).as("k")).agg(sum("id").as("s"))
-    def measure(write: String => Unit): (Int, Long, Int) = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger()
-      val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          Option(te.taskMetrics).foreach(m =>
-            shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
-      }
-      val dir = java.nio.file.Files.createTempDirectory("graft-once").resolve("out.parquet")
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        write(dir.toString)
-        org.apache.spark.ListenerBus.drain(spark.sparkContext)
-      } finally spark.sparkContext.removeSparkListener(listener)
-      val parts = dir.toFile.list().count(_.startsWith("part-"))
-      (jobs.get(), shuffleBytes.get(), parts)
-    }
-    val plain = measure(p => grouped.coalesce(1).write.parquet(p))
+    val plain = measure(p => grouped.write.parquet(p))
     val saved = measure(p => Checkpoint.save(grouped, p))
     assert(plain._2 > 0, "fixture no longer shuffles")
-    assert(saved === plain, "(jobs, shuffle bytes written, part files)")
-    assert(saved._3 === 1)
+    assert(saved === plain, "(jobs, shuffle bytes written, part files, last-stage tasks)")
+    assert(saved._3 <= spark.conf.get("spark.sql.shuffle.partitions").toInt)
+  }
+
+  test("a post-shuffle checkpoint keeps its final stage parallel; scans and scan-shuffle unions still coalesce") {
+    uncoalesced {
+      val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      assert(partitions >= 2)
+      // 97 keys over the shuffle partitions: every partition is non-empty
+      val post = measure(p => Checkpoint.save(grouped, p))
+      assert(post._4 === partitions && post._3 === partitions,
+        "(final-stage tasks, part files) of a post-shuffle save")
+      val scan = measure(p => Checkpoint.save(spark.range(0, 1000, 1, 4).toDF(), p))
+      assert(scan._3 === 1, "a scan-only save writes one file")
+      val union = measure(p => Checkpoint.save(
+        spark.range(0, 100, 1, 4).select(col("id").as("k"), col("id").as("s")).union(grouped), p))
+      assert(union._3 === 1, "a scan ∪ shuffle union still coalesces")
+      assert(union._4 === 1)
+    }
   }
 
   test("ORC checkpoints round-trip with pushdown and pruning intact; csv/json interchange") {
