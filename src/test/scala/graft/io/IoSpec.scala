@@ -175,7 +175,7 @@ class IoSpec extends SparkSpec {
     try f finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
-  test("checkpoint save runs its plan once: the shuffle is written once, into at most shuffle-partitions part files") {
+  test("checkpoint save runs its plan once: the shuffle is written once, like a plain write") {
     // under AQE, asking a frame for its partition count executes every
     // shuffle-map stage, and the write then executes them again
     val plain = measure(p => grouped.write.parquet(p))
