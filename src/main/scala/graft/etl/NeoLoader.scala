@@ -69,7 +69,11 @@ object NeoLoader {
       doNodes: Boolean = true,
       doEdges: Boolean = true,
       doneBasePath: Option[String] = None,
-      propertyConfig: NeoCypher.PropertyConfig = NeoCypher.PropertyConfig())
+      propertyConfig: NeoCypher.PropertyConfig = NeoCypher.PropertyConfig()) {
+    require(batchSize > 0, s"neoloader: batch size must be positive, got $batchSize")
+    require(maxRetries >= 0, s"neoloader: max retries must be >= 0, got $maxRetries")
+    require(retryBackoffMs >= 0, s"neoloader: retry backoff must be >= 0 ms, got $retryBackoffMs")
+  }
 
   object Config {
 
@@ -80,21 +84,25 @@ object NeoLoader {
       * `max_retry_pause.minutes/seconds`) plus graft's flat historical ones
       * (`batch_size`, `max_retries`, `retry_backoff_ms`); per-property
       * multi-value modes parse through
-      * [[NeoCypher.PropertyConfig.fromConf]].
+      * [[NeoCypher.PropertyConfig.fromConf]]. A value that is not an
+      * integer fails naming its key.
       */
     def fromConf(conf: Map[String, String], prefix: String = "neoloader."): Config = {
-      def get(keys: String*): Option[String] =
-        keys.flatMap(k => conf.get(prefix + k)).headOption
-      val pauseMs =
-        get("retry_backoff_ms").map(_.toLong).orElse {
-          val mins = get("max_retry_pause.minutes").map(_.toLong)
-          val secs = get("max_retry_pause.seconds").map(_.toLong)
-          if (mins.isEmpty && secs.isEmpty) None
-          else Some((mins.getOrElse(0L) * 60 + secs.getOrElse(0L)) * 1000)
+      // the first of `keys` present, parsed
+      def get[A](parse: String => Option[A], keys: String*): Option[A] =
+        keys.map(prefix + _).find(conf.contains).map { k =>
+          parse(conf(k)).getOrElse(throw new IllegalArgumentException(
+            s"neoloader config: $k must be an integer, got '${conf(k)}'"))
         }
+      val pauseMs = get(_.toLongOption, "retry_backoff_ms").orElse {
+        val mins = get(_.toLongOption, "max_retry_pause.minutes")
+        val secs = get(_.toLongOption, "max_retry_pause.seconds")
+        if (mins.isEmpty && secs.isEmpty) None
+        else Some((mins.getOrElse(0L) * 60 + secs.getOrElse(0L)) * 1000)
+      }
       Config(
-        batchSize = get("loader_batch_size", "batch_size").map(_.toInt).getOrElse(2500),
-        maxRetries = get("max_transaction_retries", "max_retries").map(_.toInt).getOrElse(3),
+        batchSize = get(_.toIntOption, "loader_batch_size", "batch_size").getOrElse(2500),
+        maxRetries = get(_.toIntOption, "max_transaction_retries", "max_retries").getOrElse(3),
         retryBackoffMs = pauseMs.getOrElse(0L),
         propertyConfig = NeoCypher.PropertyConfig.fromConf(conf, prefix))
     }

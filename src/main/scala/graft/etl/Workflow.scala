@@ -222,8 +222,8 @@ object Workflow {
   /** Checks every step before any runs, so a misconfigured step cannot fail
     * a wave after its siblings have written: every kind is known, no two
     * steps declare the same output (they would be two writers into one
-    * directory), and every map step's mapper resolves. Returns each map
-    * step's mapper by step name.
+    * directory), every map step's mapper resolves, and every load step's
+    * settings parse. Returns each map step's mapper by step name.
     */
   private def validate(steps: Seq[Step], conf: Map[String, String],
                        mappers: Map[String, TabFileMapper]): Map[String, TabFileMapper] = {
@@ -238,6 +238,7 @@ object Workflow {
           s"workflow steps ${writers.map(_.name).mkString(", ")} all declare output $out")
       case _ =>
     }
+    steps.filter(_.kind == "load").foreach(loadConfig)
     steps.filter(_.kind == "map").map { s =>
       val mapperName = s.conf.getOrElse("mapper",
         throw new IllegalArgumentException(s"workflow step ${s.name}: missing mapper"))
@@ -266,12 +267,22 @@ object Workflow {
           PgGraph.writeJsonl(Checkpoint.load(spark, step.inputs.head), out,
             codec = step.conf.get("codec"))
         case "load" =>
-          val cfg = NeoLoader.Config(
-            batchSize = step.conf.get("batch_size").map(_.toInt).getOrElse(2500),
-            doneBasePath = Some(step.output))
-          NeoLoader.load(PgGraph.fromJsonl(spark, step.inputs.head), transport, cfg)
+          NeoLoader.load(PgGraph.fromJsonl(spark, step.inputs.head), transport,
+            loadConfig(step))
       }
     }
     StepRun(step.name, step.kind, skipped)
+  }
+
+  /** A load step's loader settings: its done-flags and optional positive
+    * integer `batch_size`.
+    */
+  private def loadConfig(step: Step): NeoLoader.Config = {
+    val cfg = NeoLoader.Config(doneBasePath = Some(step.output))
+    step.conf.get("batch_size").fold(cfg) { v =>
+      cfg.copy(batchSize = v.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"workflow step ${step.name}: batch_size must be a positive integer, got '$v'")))
+    }
   }
 }

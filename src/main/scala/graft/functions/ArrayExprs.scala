@@ -734,10 +734,9 @@ case class Mix64Expr(child: Expression) extends UnaryExpression {
   * Σᵢ s(i,j)·v[i], s(i,j) = parity of mix64((j·dimIn + i)·φ + seed)
   * mapped to ±1. The matrix IS the hash stream — identical on every
   * executor with nothing broadcast, reproducible in the DuckDB oracle's
-  * HUGEINT mod-2^64 arithmetic, and usable verbatim in a stream. One
-  * tight codegen'd loop (dimIn·dimOut flops) instead of nested HOF
-  * reductions — which Spark 4 ANSI mode would reject anyway at the
-  * wrapping multiply.
+  * HUGEINT mod-2^64 arithmetic. One tight codegen'd loop (dimIn·dimOut
+  * flops) instead of nested HOF reductions — which Spark 4 ANSI mode
+  * would reject anyway at the wrapping multiply.
   */
 case class JlProject(child: Expression, dimOut: Int, seed: Long)
     extends UnaryExpression {

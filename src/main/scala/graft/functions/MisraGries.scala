@@ -28,10 +28,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Returns the candidate items sorted (determinism for specs/oracles —
   * estimated counts are deliberately not exposed: downstream recounts).
   */
-/** The Misra–Gries update/compress core, shared by the batch aggregate
-  * ([[MisraGriesSketch]]) and the streaming state op
-  * (graft.streaming.Streaming.heavyHitterCandidates) so the two paths
-  * cannot drift.
+/** The Misra–Gries update/compress core of the [[MisraGriesSketch]]
+  * aggregate.
   */
 object MisraGries {
 

@@ -1,7 +1,5 @@
 package graft.model
 
-import org.apache.spark.sql.types._
-
 /** Core knowledge-graph data model.
   *
   * Mirrors the reference triple model (reference: src/ketl/core.py:18-83):
@@ -28,15 +26,6 @@ object Graph {
 
   /** Keys whose values are NOT JSON-serialised (reference: src/ketl/helpers.py:38-52). */
   val SpecialKeys: Set[String] = Set(TypeKey, FromKey, ToKey, DeleteKey)
-
-  /** Column layout of a triple DataFrame (reference: src/ketl/core.py:70). */
-  val TripleColumns: Seq[String] = Seq("id", "key", "value")
-
-  val TripleSchema: StructType = StructType(Seq(
-    StructField("id", StringType, nullable = false),
-    StructField("key", StringType, nullable = false),
-    StructField("value", StringType, nullable = true)
-  ))
 
   /** PG-element types (reference: src/ketl/core.py:86-89). */
   val NodeType = "node"

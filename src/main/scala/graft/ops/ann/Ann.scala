@@ -226,47 +226,6 @@ object Ann {
     if (sorted) out.orderBy(idCol, "pos") else out
   }
 
-  /** Per-dimension (position, mean, std) of the embedding cloud — the
-    * C68/C75 moment table: DECIMAL-exact sums, mean/std 6-dp-rounded
-    * BEFORE use so every consumer (dim drift profile, outlier scoring,
-    * stream-side monitors) sees the identical numbers on any engine and
-    * layout. |dim| rows — the model shape.
-    */
-  def dimStats(emb: DataFrame, vecCol: String = "embedding"): DataFrame = {
-    val mean = col("sx").cast("double") / col("n")
-    emb.select(posexplode(vec(col(vecCol))).as(Seq("pos", "x")))
-      .groupBy("pos")
-      .agg(count(lit(1)).as("n"),
-        sum(col("x").cast("decimal(27,10)")).as("sx"),
-        sum((col("x") * col("x")).cast("decimal(27,10)")).as("sxx"))
-      .select(col("pos"), round(mean, 6).as("m"),
-        round(sqrt(greatest(col("sxx").cast("double") / col("n") - mean * mean,
-          lit(0.0))), 6).as("sd"))
-  }
-
-  /** Max-|z| outlier score per vector against a FROZEN [[dimStats]] table
-    * carried as literals — the narrow stateless form: no explode, no
-    * join, scoring runs at scan speed on a batch OR a stream (train
-    * batch-side, score anywhere — the D12 NB pattern). Per-dim z is
-    * rounded before the order-free max, zero-variance dims score 0, so
-    * the result is bit-equal to the explode+join formulation.
-    */
-  def outlierScores(emb: DataFrame, stats: DataFrame,
-                    idCol: String = "vec_id", vecCol: String = "embedding",
-                    zThreshold: Double = 4.0): DataFrame = {
-    val st = stats.orderBy("pos").collect()
-    val ms = typedLit(st.map(_.getDouble(1)).toSeq)
-    val sds = typedLit(st.map(_.getDouble(2)).toSeq)
-    emb.select(col(idCol).as("vec_id"),
-        aggregate(
-          transform(vec(col(vecCol)), (x, i) =>
-            when(element_at(sds, i + 1) > 0,
-              round(abs((x - element_at(ms, i + 1)) / element_at(sds, i + 1)), 6))
-              .otherwise(lit(0.0))),
-          lit(0.0), (acc, z) => greatest(acc, z)).as("max_abs_z"))
-      .withColumn("is_outlier", col("max_abs_z") > zThreshold)
-  }
-
   /** Per-label centroids and each vector's cosine to its label centroid —
     * the standard embedding-space diagnostic (cluster cohesion, outlier
     * and mislabel detection, data-selection scoring) ahead of training.
@@ -1150,8 +1109,8 @@ object Ann {
     * projection cuts ANN scan cost 4× while pairwise cosines move by
     * O(1/√dimOut). No data-dependent training (vs. PCA/IVF) — the matrix
     * IS the hash stream, identical on every executor, no broadcast
-    * needed, and a STREAM can project with the same expression. Narrow,
-    * one pass; components rounded to 6 dp for cross-engine comparison.
+    * needed. Narrow, one pass; components rounded to 6 dp for
+    * cross-engine comparison.
     */
   def jlProject(embs: DataFrame, dimOut: Int, seed: Long = 17L,
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {

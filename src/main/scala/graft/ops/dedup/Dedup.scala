@@ -784,8 +784,7 @@ object Dedup {
     * per-batch probe co-located) and probe each new batch with
     * [[minhashLshIncrement]]: the corpus is tokenised and signed exactly
     * once across all future increments — at 100 TB the difference between
-    * a daily batch costing O(batch) and costing O(corpus). The batch twin
-    * of the streaming [[graft.streaming.Streaming.nearDupPairs]] state.
+    * a daily batch costing O(batch) and costing O(corpus).
     */
   def minhashIndex(docs: DataFrame, numHashes: Int = 0,
                    idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
@@ -1233,10 +1232,7 @@ object Dedup {
   }
 
   /** The CDC projection behind [[sharedPassages]]: (doc_id, chunk_fp) per
-    * qualifying chunk, one row per occurrence. Pure narrow Column work —
-    * also the streaming-safe half (graft.streaming.Streaming.passageCounts
-    * aggregates it in update mode), kept shared so batch and stream
-    * chunking cannot drift.
+    * qualifying chunk, one row per occurrence. Pure narrow Column work.
     */
   def chunkFingerprints(docs: DataFrame, divisor: Int = 7, minTokens: Int = 5,
                         idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
@@ -1497,35 +1493,6 @@ object Dedup {
         when(col("spans").isNull, col(textCol)).otherwise(spliced).as("text_scrubbed"),
         coalesce(col("n_masked"), lit(0L)).cast("long").as("n_masked"))
       .orderBy("doc_id")
-  }
-
-  /** A materialised Bloom filter WITH the parameters it was built with —
-    * probing with mismatched bits/numHashes silently breaks the
-    * no-false-negative guarantee (wrong modulus) or throws (out-of-range
-    * word index), so the bundle travels as one value and probe sites
-    * never take the parameters separately.
-    */
-  final case class BloomLit(words: Array[Long], bits: Int, numHashes: Int)
-
-  /** Materialise the fixed-size Bloom filter of an eval set's distinct
-    * word n-gram hashes — the probe side of [[contamination]]'s Bloom
-    * branch, exposed so a STREAM can carry it as a literal: the filter is
-    * `bits/8` bytes however large the eval set, and probing it is a
-    * stateless narrow map (see
-    * [[graft.streaming.Streaming.contaminationFlags]]). Returns the zero
-    * filter when the eval set is empty (flags nothing).
-    */
-  def evalGramBloom(docs: DataFrame, isEval: Column, n: Int = 8,
-                    bits: Int = 1 << 23, numHashes: Int = 7,
-                    textCol: String = "text"): BloomLit = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    val row = docs.where(isEval)
-      .select(explode(ngramHashes(col(textCol), n)).as("h"))
-      .agg(call_function("graft_bloom_agg", col("h"), lit(bits), lit(numHashes)))
-      .head
-    val words = Option(row.getAs[scala.collection.Seq[Long]](0))
-      .map(_.toArray).getOrElse(new Array[Long](graft.functions.Bloom.wordsFor(bits)))
-    BloomLit(words, bits, numHashes)
   }
 
   /** Survivor selection per dedup cluster — the step AFTER clustering that

@@ -140,10 +140,8 @@ object Sampling {
     shardStats(df, idCol, textCol, nShards, salt).orderBy("shard")
 
   /** [[shardManifest]] without the final presentation sort — every term
-    * (count/sum/min/max/xor) is a mergeable aggregate, so the SAME plan
-    * runs as a streaming groupBy (the D34 live-ingest manifest, where a
-    * sort is illegal); each term is also commutative, which is WHY a
-    * stream batched any way converges on the batch manifest.
+    * (count/sum/min/max/xor) is a mergeable, commutative aggregate, so
+    * manifests of disjoint batches merge into the manifest of their union.
     */
   private[graft] def shardStats(df: DataFrame, idCol: String, textCol: String,
                                 nShards: Int, salt: String = ""): DataFrame = {

@@ -30,9 +30,8 @@ object Stats {
     * until the final division, so the statistic is bit-identical under
     * any partitioning; valid while na·nb < 2⁶³, i.e. both sides under
     * ~3e9 rows — far past any drift-register support). One row out:
-    * (na, nb, ks 6-dp, NULL ks on an empty side). This is THE kernel —
-    * the batch C60 query and the streaming D31 finisher both run it, so
-    * stream and batch cannot drift.
+    * (na, nb, ks 6-dp, NULL ks on an empty side). The batch C60 query
+    * runs it.
     */
   def ksFromJoint(c: DataFrame, keyCol: String = "len"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -55,8 +54,7 @@ object Stats {
     * exact integer counts, the support-sized sum routes through
     * DECIMAL(27,10) (associative — partition order cannot drift it),
     * js_norm divides by a hardcoded ln 2. One row out: (na, nb, js_nats,
-    * js_norm), NULLs on an empty side. Shared by batch C71 and the D31
-    * streaming finisher.
+    * js_norm), NULLs on an empty side. The batch C71 query runs it.
     */
   def jsFromJoint(c: DataFrame): DataFrame = {
     val t = c.agg(sum("a").as("na"), sum("b").as("nb"))
@@ -76,16 +74,6 @@ object Stats {
           round(round((col("sp") + col("sq")).cast("double") * 0.5, 6)
             / 0.6931471805599453, 6)).as("js_norm"))
   }
-
-  /** Two (key, cnt) REGISTER tables — e.g. a frozen baseline and a live
-    * streaming state — joined into the joint count table [[ksFromJoint]]/
-    * [[jsFromJoint]] consume: full outer on the key, absent keys count 0.
-    */
-  def jointCounts(a: DataFrame, b: DataFrame, keyCol: String = "len"): DataFrame =
-    a.select(col(keyCol), col("cnt").as("a"))
-      .join(b.select(col(keyCol), col("cnt").as("b")), Seq(keyCol), "full_outer")
-      .select(col(keyCol), coalesce(col("a"), lit(0L)).as("a"),
-        coalesce(col("b"), lit(0L)).as("b"))
 
   /** Per-key skew diagnostics: the `topK` heaviest keys of `keyCol` with
     * row count, share of total rows, and skew ratio (count / mean count
@@ -113,8 +101,7 @@ object Stats {
   }
 
   /** Power-of-two histogram bucket of a non-negative value: bit length of
-    * (v+1) = ⌊log₂(v+1)⌋, integer-exact (no Math.log), shared by the batch
-    * sketch and its streaming twin so bucketing cannot drift.
+    * (v+1) = ⌊log₂(v+1)⌋, integer-exact (no Math.log).
     */
   def pow2Bucket(valueCol: Column): Column =
     length(bin(valueCol.cast("long") + 1)) - 1
@@ -487,14 +474,13 @@ object Stats {
     * accumulation would differ in the last bits run-to-run and
     * cross-engine; integer sums are exact and order-independent, so the
     * final double formula is bit-stable (rounded to 6dp like every
-    * numerically-sensitive double). Shared by the batch `events_anomaly`
-    * query and the streaming monitor, so stream == batch is provable.
+    * numerically-sensitive double).
     *
     * PRECONDITION: (`groupCol`, `orderCol`) must be unique — an aggregate's
     * output always is. A duplicated key would make the rows-based frame
     * double-count one bucket and order ties arbitrarily, silently breaking
-    * the bit-stability contract; accumulation wrappers must dedup replayed
-    * rows first (see graft.streaming.Streaming.anomalyScores).
+    * the bit-stability contract, so a caller that accumulates counts from
+    * replayed input must dedup the replayed rows first.
     *
     * Scale: input is an already-reduced count table (|groups|·|buckets|
     * rows); the window runs as |groups| independent sorted runs.
@@ -582,8 +568,7 @@ object Stats {
   /** The d (row, bucket) coordinates of a value in a Count-Min sketch
     * (Cormode & Muthukrishnan 2005): row j hashes the value with an
     * independent md5-derived 32-bit hash (the j is salted into the hash
-    * input), bucket = hash mod w. Shared by the batch register build and
-    * the streaming monitor so the two sketches are the same table.
+    * input), bucket = hash mod w.
     */
   def cmsBuckets(value: Column, d: Int = 4, w: Int = 64): Column =
     array((0 until d).map { j =>
@@ -607,10 +592,9 @@ object Stats {
     // and a compact parquet source arrives as a single scan split, putting
     // the whole hash pass on one core (measured 2.7 s → 0.4 s on the
     // sf0.1 lineitem side of q_join_card_est). No-op once the scan has
-    // >= defaultParallelism splits — i.e. at any real scale — and skipped
-    // for streams (a micro-batch plan cannot be probed via .rdd).
-    val base = if (df.isStreaming) df else graft.io.DataFrames.spread(df)
-    base.select(explode(cmsBuckets(value, d, w)).as("jb"))
+    // >= defaultParallelism splits — i.e. at any real scale.
+    graft.io.DataFrames.spread(df)
+      .select(explode(cmsBuckets(value, d, w)).as("jb"))
       .groupBy(col("jb.j").as("j"), col("jb.b").as("b"))
       .agg(count(lit(1)).as("c"))
   }
@@ -653,10 +637,7 @@ object Stats {
     * trained-model stance.
     */
   /** The CUSUM reference parameters per group — μ6/k6/h6 in the 1e6
-    * integer scale (see [[cusum]]'s exactness contract). Factored so the
-    * streaming monitor (D36) trains on the SAME arithmetic the batch op
-    * scores with (the D12 train-batch/score-live pattern — kernels
-    * shared, the twins cannot drift).
+    * integer scale (see [[cusum]]'s exactness contract).
     */
   def cusumParams(counts: DataFrame, groupCol: String, valueCol: String,
                   slackSds: Double = 0.5, alarmSds: Double = 4.0): DataFrame = {
@@ -878,103 +859,5 @@ object Stats {
       .withColumn("agreement",
         round((col("both") + col("neither")).cast("double") /
           (col("both") + col("only_a") + col("only_b") + col("neither")), 6))
-  }
-
-  /** The B74 chi-square-against-uniform kernel as a scalar over a 24-slot
-    * hour-of-day count array — shared with the streaming seasonality
-    * monitor (D39) so the live and batch faces compute the IDENTICAL
-    * statistic: χ² = Σ(24·o − T)² / (24T), the integer-ratio form with no
-    * per-term division, floor(v·1e6+0.5)-quantized exactly like the batch
-    * column expression. Overflow REFUSES (Math.*Exact — the ANSI stance
-    * the batch side gets for free) rather than wrapping; an empty profile
-    * scores 0.
-    */
-  def chi2Hod(counts: Array[Long]): (Long, Double) = {
-    require(counts.length == 24, s"chi2Hod: need 24 slots, got ${counts.length}")
-    val t = counts.foldLeft(0L)(Math.addExact)
-    if (t == 0L) (0L, 0.0)
-    else {
-      var num = 0L
-      counts.foreach { o =>
-        val d = Math.subtractExact(Math.multiplyExact(24L, o), t)
-        num = Math.addExact(num, Math.multiplyExact(d, d))
-      }
-      (t, math.floor(num.toDouble / (24L * t).toDouble * 1e6 + 0.5) / 1e6)
-    }
-  }
-
-  /** Exact autocorrelation profile of a bucket→count map — the scalar
-    * kernel of the D42 live monitor and the arithmetic twin of B80
-    * (`events_autocorr`): the series is zero-filled from the min to the
-    * max bucket (an absent bucket is a real zero), the mean is kept
-    * RATIONAL by multiplying every deviation through by n (num and den
-    * are exact integers — Math.*Exact refuses overflow loudly, the D39
-    * stance), and each lag's single division is floor(v·1e6+0.5)-
-    * quantized exactly like the batch query's. A constant series
-    * (den = 0) yields None per lag, never a division error.
-    */
-  def acfProfile(counts: Map[Long, Long], bucketUs: Long,
-                 maxLag: Int = 6): Seq[(Int, Long, Option[Double])] = {
-    require(counts.nonEmpty, "acfProfile: need at least one bucket")
-    require(bucketUs > 0 && maxLag > 0, "acfProfile: bad parameters")
-    val b0 = counts.keys.min
-    val b1 = counts.keys.max
-    val n = ((b1 - b0) / bucketUs + 1).toInt
-    val xs = Array.tabulate(n)(i => counts.getOrElse(b0 + i * bucketUs, 0L))
-    val sx = xs.foldLeft(0L)(Math.addExact)
-    val dev = xs.map(x => Math.subtractExact(Math.multiplyExact(n.toLong, x), sx))
-    val den = dev.foldLeft(0L)((a, d) =>
-      Math.addExact(a, Math.multiplyExact(d, d)))
-    (1 to maxLag).map { k =>
-      var num = 0L
-      var i = k
-      while (i < n) {
-        num = Math.addExact(num, Math.multiplyExact(dev(i), dev(i - k)))
-        i += 1
-      }
-      val acf = if (den == 0L) None
-        else Some(math.floor(num.toDouble / den * 1e6 + 0.5) / 1e6)
-      (k, n.toLong, acf)
-    }
-  }
-
-  /** Best single change point (AMOC) of a bucket→count map — the scalar
-    * kernel of the D43 live monitor and the arithmetic twin of B81
-    * (`events_changepoint`): over the zero-filled series, maximise
-    * f(i) = S₁²/i + (S−S₁)²/(n−i) at interior splits, ties to the
-    * EARLIEST bucket; f is built with the exact expression shape the
-    * batch query uses (cast→square→divide→add, each correctly-rounded
-    * IEEE — bit-equal cross-engine), means and the reduction
-    * floor(v·1e6+0.5)-quantized. Returns None when the series has no
-    * interior split (n < 2).
-    */
-  def changepoint(counts: Map[Long, Long], bucketUs: Long)
-      : Option[(Long, Long, Long, Long, Double, Double, Double)] = {
-    require(counts.nonEmpty, "changepoint: need at least one bucket")
-    val b0 = counts.keys.min
-    val b1 = counts.keys.max
-    val n = ((b1 - b0) / bucketUs + 1).toInt
-    if (n < 2) return None
-    val xs = Array.tabulate(n)(i => counts.getOrElse(b0 + i * bucketUs, 0L))
-    val s = xs.foldLeft(0L)(Math.addExact)
-    var s1 = 0L
-    var bestF = Double.NegativeInfinity
-    var bestI = -1
-    var bestS1 = 0L
-    var i = 1
-    while (i < n) {
-      s1 += xs(i - 1)
-      val s1d = s1.toDouble
-      val s2d = (s - s1).toDouble
-      val f = s1d * s1d / i + s2d * s2d / (n - i)
-      if (f > bestF) { bestF = f; bestI = i; bestS1 = s1 }
-      i += 1
-    }
-    def q6(v: Double) = math.floor(v * 1e6 + 0.5) / 1e6
-    val sd = s.toDouble
-    Some((n.toLong, b0 + (bestI - 1) * bucketUs, bestI.toLong,
-      (n - bestI).toLong,
-      q6(bestS1.toDouble / bestI), q6((s - bestS1).toDouble / (n - bestI)),
-      q6(bestF - sd * sd / n)))
   }
 }

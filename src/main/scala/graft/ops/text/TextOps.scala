@@ -522,15 +522,14 @@ object TextOps {
     * gate that feeds the curation pipeline's quality filter.
     */
   /** The five individual gopher gate flags (excludes the derived
-    * `n_tokens`/`pass`) — the flag set `quality_agreement` and its
-    * streaming monitor cross-tabulate.
+    * `n_tokens`/`pass`) — the flag set `quality_agreement`
+    * cross-tabulates.
     */
   val GopherFlagNames: Seq[String] = Seq("ok_token_count", "ok_mean_word_len",
     "ok_symbol_ratio", "ok_alpha_words", "ok_stopwords")
 
-  /** One 0/1 column per [[GopherFlagNames]] flag — the per-doc frame both
-    * the batch diagnostic and the streaming monitor aggregate, so their
-    * kernels cannot drift.
+  /** One 0/1 column per [[GopherFlagNames]] flag — the per-doc frame the
+    * `quality_agreement` diagnostic aggregates.
     */
   def gopherFlagFrame(df: DataFrame, textCol: String = "text"): DataFrame =
     df.select(gopherColumns(col(textCol)).collect {
@@ -631,33 +630,28 @@ object TextOps {
 
   /** A trained NB model: token log-odds `weights` (tok, w) and the prior
     * `bias` — the artifact of [[nbTrain]], consumed by [[nbScore]] on any
-    * other frame INCLUDING a stream (the score is a broadcast join + a
-    * per-doc sum, no training state). The weights are locally
-    * checkpointed: lineage is cut, but the blocks live on this session's
-    * executors — the model is session-scoped. To carry it across jobs (or
-    * survive executor loss on a long-lived scoring stream), persist
-    * `weights` to reliable storage and reload.
+    * other frame (the score is a broadcast join + a per-doc sum, no
+    * training state). The weights are locally checkpointed: lineage is
+    * cut, but the blocks live on this session's executors — the model is
+    * session-scoped. To carry it across jobs (or survive executor loss),
+    * persist `weights` to reliable storage and reload.
     */
   final case class NbModel(weights: org.apache.spark.sql.DataFrame, bias: Double)
 
   /** Train the NB distillation model alone — the batch half of the
-    * train-once / score-forever split (score new batches or a stream with
+    * train-once / score-forever split (score new batches with
     * [[nbScore]]; [[nbDistill]] is train+score over the same corpus and
-    * shares this arithmetic, so stream scores provably match it).
+    * shares this arithmetic).
     */
   def nbTrain(docs: org.apache.spark.sql.DataFrame, label: Column,
               alpha: Double = 1.0,
               idCol: String = "doc_id", textCol: String = "text"): NbModel =
     nbFromLabeled(stageLabeled(docs, label, alpha, idCol, textCol), alpha)
 
-  /** Score any document frame (batch or stream) with a trained model.
+  /** Score any document frame with a trained model.
     * Every input document gets exactly one output row: tokens unseen at
     * training time contribute zero evidence, and a document with NO
-    * in-vocabulary tokens scores the bias alone. On a stream the per-doc
-    * sum is an update-mode aggregate whose groups complete within the
-    * arriving batch — but the state store still keeps a row per doc_id
-    * ever seen; a long-lived production stream should bound it with an
-    * ingest-time watermark (the same discipline as D7/D7b).
+    * in-vocabulary tokens scores the bias alone.
     */
   def nbScore(docs: org.apache.spark.sql.DataFrame, model: NbModel,
               idCol: String = "doc_id", textCol: String = "text")
@@ -900,35 +894,28 @@ object TextOps {
     * partition iterator, so nothing is lost to interpretation overhead.
     */
   def winnow(df: DataFrame, k: Int = 5, w: Int = 4,
-             idCol: String = "doc_id", textCol: String = "text",
-             extraCols: Seq[String] = Nil): DataFrame = {
+             idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     // the id passes through OPAQUELY (no cast): a Row encoder carries the
     // caller's id type to the output unchanged, so string/uuid document
     // ids survive — an earlier cast-to-long turned them into nulls that
-    // crashed the non-nullable Long encoder at runtime. `extraCols` ride
-    // the same opaque path (D27b carries the event-time column through).
+    // crashed the non-nullable Long encoder at runtime.
     // spread before the fingerprint pass: one md5 per gram ≈ one per
     // CHARACTER of the corpus, and a compact parquet source arrives as a
-    // single scan split — the whole pass on one core. No-op at real
-    // scale; skipped for streams (micro-batch plans cannot be .rdd-probed
-    // — D27b consumes this op on a stream).
-    val base = if (df.isStreaming) df else graft.io.DataFrames.spread(df)
-    val pruned = base.select(col(idCol).as("doc_id") +:
-        col(textCol).cast("string").as("text") +: extraCols.map(col): _*)
+    // single scan split — the whole pass on one core. No-op at real scale.
+    val pruned = graft.io.DataFrames.spread(df)
+      .select(col(idCol).as("doc_id"), col(textCol).cast("string").as("text"))
       .where(length(col("text")) >= k + w - 1)
     val outSchema = StructType(Seq(
       pruned.schema("doc_id").copy(name = "doc_id"),
       StructField("pos", LongType, nullable = false),
-      StructField("fp", LongType, nullable = false)) ++
-      extraCols.map(c => pruned.schema(c)))
+      StructField("fp", LongType, nullable = false)))
     pruned.mapPartitions { rows =>
         val md = java.security.MessageDigest.getInstance("MD5")
         rows.flatMap { r =>
           val id = r.get(0)
           val text = r.getString(1)
-          val extras = (2 until r.length).map(r.get)
           // positions and gram windows count CODEPOINTS, not UTF-16 units:
           // Spark's own substr/length Columns (which scrubWinnow splices
           // with) and DuckDB both index by codepoint, and a java.lang.String
@@ -965,7 +952,7 @@ object TextOps {
               val p = deque.peekFirst
               if (p != lastPicked) {
                 // 1-based position, oracle-aligned
-                out += Row.fromSeq(id +: (p + 1L) +: hs(p) +: extras)
+                out += Row(id, p + 1L, hs(p))
                 lastPicked = p
               }
             }

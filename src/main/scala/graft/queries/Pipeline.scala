@@ -1779,7 +1779,7 @@ object Pipeline {
     val c = d.groupBy("len").agg(
       count(when(col("source") === "src0", 1)).as("a"),
       count(when(col("source") === "src1", 1)).as("b"))
-    // the KS tail is the SHARED kernel (also the D31 streaming finisher)
+    // the KS tail is the shared kernel
     graft.ops.stats.Stats.ksFromJoint(c, "len")
   }
 
@@ -1821,7 +1821,7 @@ object Pipeline {
     val c = toks.groupBy("tok").agg(
       count(when(col("source") === "src0", 1)).as("a"),
       count(when(col("source") === "src1", 1)).as("b"))
-    // the JS tail is the SHARED kernel (also the D31 streaming finisher)
+    // the JS tail is the shared kernel
     graft.ops.stats.Stats.jsFromJoint(c)
   }
 
@@ -4478,7 +4478,7 @@ object Pipeline {
     * equal by construction to the full-corpus winnow pair pass restricted
     * to the batch (WinnowIncrementSpec proves the restriction equality).
     * Completes the ingest-time story the minhash family already has
-    * (C3b/D7): exact-substring dedup now also runs per-batch.
+    * (C3b): exact-substring dedup now also runs per-batch.
     */
   def dedupWinnowInc(spark: SparkSession, dir: String): DataFrame = {
     val d = docs(spark, dir)

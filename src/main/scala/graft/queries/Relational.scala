@@ -1,7 +1,7 @@
 package graft.queries
 import graft.io.DataFrames.StagedSyntax
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
@@ -185,9 +185,9 @@ object Relational {
       |WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_partkey = p_partkey AND l_quantity > 45)
       |ORDER BY p_partkey""".stripMargin
 
-  /** B10: tumbling-window event aggregation (batch twin of the streaming
-    * pipeline in graft.streaming). Hour buckets via date_trunc — identical
-    * semantics to `window(ts, "1 hour")` but hash-comparable to the oracle.
+  /** B10: tumbling-window event aggregation. Hour buckets via date_trunc —
+    * identical semantics to `window(ts, "1 hour")` but hash-comparable to
+    * the oracle.
     *
     * `events.ts` arrives through [[Tables.eventTs]] (schema-adaptive:
     * epoch-nano longs and parquet timestamps both normalise to
@@ -210,11 +210,11 @@ object Relational {
       |FROM events GROUP BY 1, 2 ORDER BY bucket, event_type""".stripMargin
 
   /** B28: HOPPING (sliding) window aggregation — `window(ts, 15min, 5min)`
-    * assigns every event to duration/slide = 3 overlapping windows; the
-    * batch twin of the streaming hop-window shape. The oracle reproduces
-    * Spark's epoch-aligned window assignment with integer nano arithmetic
-    * (bucket index minus k ∈ {0,1,2}); window starts are emitted as epoch
-    * micros (BIGINT) per the event-time output rule (see eventsWindow).
+    * assigns every event to duration/slide = 3 overlapping windows. The
+    * oracle reproduces Spark's epoch-aligned window assignment with integer
+    * nano arithmetic (bucket index minus k ∈ {0,1,2}); window starts are
+    * emitted as epoch micros (BIGINT) per the event-time output rule (see
+    * eventsWindow).
     */
   def eventsHop(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
@@ -242,9 +242,7 @@ object Relational {
     * The z stage is [[graft.ops.stats.Stats.trailingZ]] — closed-form from
     * exact integer window sums (see there for the bit-stability argument;
     * zero variance is exactly 0 because the s1²/k division is exact for
-    * equal counts), shared with the streaming monitor
-    * (graft.streaming.Streaming.anomalyScores) so stream == batch is
-    * provable. Buckets with fewer than 3 trailing neighbours or zero
+    * equal counts). Buckets with fewer than 3 trailing neighbours or zero
     * variance emit a null z and never flag.
     *
     * Plan: one keyed aggregate to hourly counts, then a window partitioned
@@ -2304,17 +2302,58 @@ object Relational {
       |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
 
-  /** B11/D3: gap-based sessionisation — runs the custom stateful operator
-    * (graft.streaming.Streaming.sessionize, flatMapGroupsWithState) in batch
-    * mode; the oracle reproduces the semantics independently via lag/cumsum
-    * window SQL, cross-validating the state logic.
+  final case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
+                         event_type: String, value: Double)
+  final case class UserSession(user_id: Long, session_start: java.sql.Timestamp,
+                               session_end: java.sql.Timestamp, n_events: Int,
+                               sum_value: Double)
+
+  /** D3: gap-based sessionisation, a typed per-user operator for semantics
+    * `window()` can't express. A user's events are sorted by time and split
+    * into sessions wherever the gap between CONSECUTIVE events exceeds
+    * `gapMinutes`; every session, the trailing one included, is emitted.
+    */
+  def sessionize(events: Dataset[Event], gapMinutes: Int = 30): Dataset[UserSession] = {
+    import events.sparkSession.implicits._
+    val gapMs = gapMinutes * 60 * 1000L
+
+    def toSession(userId: Long, es: List[Event]): UserSession = {
+      // per-event 6dp quantisation via floor(v·1e6 + 0.5) — multiply, add,
+      // floor are each single correctly-rounded IEEE ops, so every engine
+      // derives the IDENTICAL integer unit from the same double, and the
+      // long sum is exact and order-independent. (The previous
+      // new BigDecimal(double) HALF_UP quantised the EXACT binary
+      // expansion, which disagrees with DuckDB's double→decimal cast on
+      // doubles whose shortest representation parks ON the half boundary
+      // — found by the r17 seeded robustness sweep, value 0.0005315:
+      // exact expansion …49999 rounds down, the cast rounds up.)
+      val units = es.foldLeft(0L) { (acc, e) =>
+        acc + math.floor(e.value * 1e6 + 0.5).toLong
+      }
+      UserSession(userId, es.head.ts, es.last.ts, es.size, units / 1e6)
+    }
+
+    events.groupByKey(_.user_id).flatMapGroups { (userId, it) =>
+      val sorted = it.toList.sortBy(_.ts.getTime)
+      // consecutive-gap split, sessions in order, each session in order
+      val sessions = sorted.tail.foldLeft(List(List(sorted.head))) { (acc, e) =>
+        if (e.ts.getTime - acc.head.head.ts.getTime > gapMs) List(e) :: acc
+        else (e :: acc.head) :: acc.tail
+      }.map(_.reverse).reverse
+      sessions.iterator.map(toSession(userId, _))
+    }
+  }
+
+  /** B11: gap-based sessionisation — runs [[sessionize]]; the oracle
+    * reproduces the semantics independently via lag/cumsum window SQL,
+    * cross-validating the typed operator.
     */
   def sessionizeEvents(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val events = Tables.events(spark, dir)
       .select("event_id", "ts", "user_id", "event_type", "value")
-      .as[graft.streaming.Streaming.Event]
-    graft.streaming.Streaming.sessionize(events, gapMinutes = 30)
+      .as[Event]
+    sessionize(events, gapMinutes = 30)
       .toDF()
       // session bounds as epoch micros (BIGINT) — see eventsWindow
       .withColumn("session_start", unix_micros(col("session_start")))

@@ -10,9 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * from [[Session.local]] (or the user-configured
   * [[graft.io.Config.sparkSession]]), thread pools from [[Bounded.map]],
   * PG element JSON from the one native writer that [[graft.etl.PgGraph]]
-  * calls, and
-  * every main that ships is named in README's tool list, which names no
-  * other.
+  * calls, every operator is batch (no Structured Streaming source, sink or
+  * state), and every main that ships is named in README's tool list,
+  * which names no other.
   */
 class SourceLayoutSpec extends AnyFunSuite {
 
@@ -36,6 +36,14 @@ class SourceLayoutSpec extends AnyFunSuite {
       case (p, src) if """\bExecutors\b""".r.findFirstIn(src).isDefined => p.toString
     }.sorted
     assert(sites === Seq("graft/Bounded.scala"))
+  }
+
+  test("the library is batch only: no streaming package, source, sink or state") {
+    assert(!Files.exists(root.resolve("graft/streaming")))
+    for (api <- Seq("readStream", "writeStream", "GroupState")) {
+      assert(sources.filter(_._2.contains(api)).map(_._1.toString) === Seq.empty,
+        s"$api appears in src/main")
+    }
   }
 
   test("PG elements have one JSON writer and one property-value form") {

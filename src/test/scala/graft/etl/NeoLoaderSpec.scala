@@ -58,6 +58,23 @@ class NeoLoaderSpec extends SparkSpec {
     }
   }
 
+  test("loader config fails on a bad value, naming its key") {
+    for ((k, v) <- Seq("loader_batch_size" -> "lots", "max_transaction_retries" -> "3.5",
+        "retry_backoff_ms" -> "", "max_retry_pause.seconds" -> "ten")) {
+      val e = intercept[IllegalArgumentException] {
+        NeoLoader.Config.fromConf(Map(s"neoloader.$k" -> v))
+      }
+      assert(e.getMessage === s"neoloader config: neoloader.$k must be an integer, got '$v'")
+    }
+    // integers out of range: no batches, negative retries, negative pause
+    for ((k, v) <- Seq("batch_size" -> "0", "max_retries" -> "-1", "retry_backoff_ms" -> "-5")) {
+      val e = intercept[IllegalArgumentException] {
+        NeoLoader.Config.fromConf(Map(s"neoloader.$k" -> v))
+      }
+      assert(e.getMessage.contains(v), e.getMessage)
+    }
+  }
+
   test("load runs nodes, index, then edges with batch accounting") {
     RecordingTransport.reset(failFirst = 0)
     // single partition so batch counts are deterministic in the assertions

@@ -285,6 +285,18 @@ class WorkflowSpec extends SparkSpec {
     assert(duplicate.getMessage.contains("gene-triples.parquet"))
     assert(successMarkers(data).isEmpty, successMarkers(data).mkString(", "))
 
+    // the load step runs last, yet its settings are checked before any
+    // step writes: a batch size that is not a positive integer
+    for (bad <- Seq("abc", "0", "-3")) {
+      val badBatch = intercept[IllegalArgumentException] {
+        Workflow.run(spark, conf + ("workflow.steps.s4_load.batch_size" -> bad),
+          registry, new RecordingTransport)
+      }
+      assert(badBatch.getMessage.contains("s4_load"), badBatch.getMessage)
+      assert(badBatch.getMessage.contains(s"batch_size must be a positive integer, got '$bad'"))
+      assert(successMarkers(data).isEmpty, successMarkers(data).mkString(", "))
+    }
+
     val (conf2, _) = setup()
     val stuck = intercept[IllegalArgumentException] {
       Workflow.run(spark,

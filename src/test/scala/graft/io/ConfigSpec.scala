@@ -263,8 +263,8 @@ class ConfigSpec extends graft.SparkSpec {
   }
 
   test("the streaming state-store backend rides the config path to the session") {
-    // a YAML-configured pipeline selects RocksDB for its stateful
-    // monitors without code changes — the conf key must reach the session
+    // a YAML config selects a Spark state-store backend without code
+    // changes — the conf key must reach the session
     spark
     try {
       val s = Config.sparkSession(Map(

@@ -633,26 +633,4 @@ class StatsSpec extends SparkSpec {
       }
     }
   }
-
-  test("acfProfile: zero-fill, exact integer ladder, constant None, overflow refusal") {
-    import graft.ops.stats.Stats
-    val h = 3600L * 1000000L
-    // the B80 alternator [1,2,1,2,1]
-    val alt = Map(0L -> 1L, h -> 2L, 2 * h -> 1L, 3 * h -> 2L, 4 * h -> 1L)
-    val p = Stats.acfProfile(alt, h).map { case (k, n, a) => k -> ((n, a)) }.toMap
-    assert(p(1) === ((5L, Some(-0.8))))
-    assert(p(2) === ((5L, Some(math.floor(17.0 / 30 * 1e6 + 0.5) / 1e6))))
-    assert(p(3) === ((5L, Some(-0.4))))
-    // an absent middle bucket is a REAL zero, not a splice
-    val gap = Map(0L -> 2L, 2 * h -> 2L)
-    assert(Stats.acfProfile(gap, h).head._3 ===
-      Some(math.floor(-16.0 / 24 * 1e6 + 0.5) / 1e6))
-    // constant series: den = 0 -> None at every lag, never an error
-    assert(Stats.acfProfile(Map(0L -> 3L, h -> 3L), h).forall(_._3.isEmpty))
-    // overflow refuses loudly (the D39 Math.*Exact stance): an extreme
-    // one-sided count makes den = dev² blow past 2⁶³
-    intercept[ArithmeticException] {
-      Stats.acfProfile(Map(0L -> Long.MaxValue / 2, h -> 0L), h)
-    }
-  }
 }
