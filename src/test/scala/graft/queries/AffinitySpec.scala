@@ -7,8 +7,7 @@ import graft.SparkSpec
 
 /** Hand-fixture semantics of the r17 leg-3 additions: B78 market-basket
   * lift, B79 session concurrency sweep, B80 zero-filled autocorrelation,
-  * and the C116 calibration audit; also the D3 gap sessionizer behind B11
-  * and the schema-adaptive events reader every event query starts from.
+  * and the C116 calibration audit.
   */
 class AffinitySpec extends SparkSpec {
 
@@ -223,71 +222,5 @@ class AffinitySpec extends SparkSpec {
     // s2: shared by all 3 docs, but 3 < 4 -> no template, nothing flagged
     assert(out(6L) === ((2L, 0L, 0.0, false)))
     assert(out.keySet === Set(1L, 2L, 3L, 4L, 5L, 6L, 7L, 8L))
-  }
-
-  test("D3: sessionize splits on gaps > 30min and aggregates per session") {
-    def at(min: Long) = new Timestamp(min * 60000L)
-    val events = Seq(
-      Relational.Event(1, at(0), 7L, "click", 1.0),
-      Relational.Event(2, at(10), 7L, "click", 2.0),
-      Relational.Event(3, at(100), 7L, "view", 4.0),  // gap 90min → new session
-      Relational.Event(4, at(120), 7L, "click", 8.0),
-      Relational.Event(5, at(0), 9L, "view", 16.0)
-    ).toDS()
-    val sessions = Relational.sessionize(events, gapMinutes = 30)
-      .collect().sortBy(s => (s.user_id, s.session_start.getTime))
-    assert(sessions.length === 3)
-    val s1 = sessions(0)
-    assert(s1.user_id === 7L && s1.n_events === 2 && s1.sum_value === 3.0)
-    assert(s1.session_start === at(0) && s1.session_end === at(10))
-    val s2 = sessions(1)
-    assert(s2.n_events === 2 && s2.sum_value === 12.0)
-    assert(s2.session_start === at(100) && s2.session_end === at(120))
-    val s3 = sessions(2)
-    assert(s3.user_id === 9L && s3.n_events === 1 && s3.sum_value === 16.0)
-    assert(s3.session_start === at(0) && s3.session_end === at(0))
-  }
-
-  test("events ingestion is schema-adaptive: nanos-long and timestamp ts agree") {
-    // fixtures in BOTH schemas events.parquet has shipped in: ts as int64
-    // epoch-nanos and as parquet TIMESTAMP micros. Same logical events,
-    // micro-exact values.
-    import org.apache.spark.sql.functions.{col, timestamp_micros}
-    import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
-    val tmp = Files.createTempDirectory("graft-dual").toString
-    val rows = Seq( // (event_id, ts in epoch MICROS, user_id, type, value, props)
-      (1L, 1000000000000000L, 7L, "view", 1.0, """{"k":1}"""),
-      (2L, 1000000000500000L, 7L, "click", 2.0, """{"k":2}"""),
-      (3L, 1000003600000007L, 9L, "view", 4.0, """{"k":3}"""))
-    // single-FILE layout like the test data ($dir/events.parquet is a file,
-    // not a directory): stage the write, move the lone part file in place
-    def asSingleFile(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = s"$tmp/stage_$name"
-      df.coalesce(1).write.parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      Files.createDirectories(java.nio.file.Paths.get(s"$tmp/$name"))
-      Files.move(part.toPath, java.nio.file.Paths.get(s"$tmp/$name/events.parquet"))
-    }
-    asSingleFile(rows.map { case (id, us, u, t, v, p) => (id, us * 1000L, u, t, v, p) }
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props"), "nanos")
-    asSingleFile(rows.toDF("event_id", "ts_us", "user_id", "event_type", "value", "props")
-      .withColumn("ts", timestamp_micros(col("ts_us")).cast(TimestampNTZType))
-      .select("event_id", "ts", "user_id", "event_type", "value", "props"), "micros")
-
-    for (d <- Seq(s"$tmp/nanos", s"$tmp/micros")) {
-      // both normalise to ONE downstream type
-      assert(Tables.events(spark, d).schema("ts").dataType === TimestampType, d)
-    }
-    // the event queries give identical output from either schema
-    def win(d: String) = Relational.eventsWindow(spark, d).collect().map(_.toSeq).toSeq
-    assert(win(s"$tmp/nanos") === win(s"$tmp/micros"))
-    assert(win(s"$tmp/nanos").nonEmpty)
-    def sessions(d: String) =
-      Relational.sessionizeEvents(spark, d).collect().map(_.toSeq).toSeq
-    assert(sessions(s"$tmp/nanos") === sessions(s"$tmp/micros"))
-    // the 7 µs past the hour survives: user 9's session starts at ...007
-    assert(sessions(s"$tmp/micros").map(r => r(0) -> r(1)) ===
-      Seq(7L -> 1000000000000000L, 9L -> 1000003600000007L))
   }
 }
