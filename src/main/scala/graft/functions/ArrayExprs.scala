@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -441,7 +441,10 @@ object SortedIntersectCount {
 
 /** Count of elements ≤ `value` in a SORTED `array<double>` — the monotone
   * bucket id the exact-percentile selection route assigns per row against
-  * its group's cut-point array. A `size(filter(cuts, c -> c <= v))`
+  * its group's cut-point array. "≤" is Spark's SQL order on doubles (NaN
+  * above every number, -0.0 equal to 0.0), the order the route's rank
+  * sort uses; with IEEE `<=` a NaN value would land in bucket 0 and rank
+  * as the group's smallest value. A `size(filter(cuts, c -> c <= v))`
   * higher-order-function formulation runs the lambda interpreted per
   * element (99 evals/row on the percentile cut grid); this compiles to a
   * codegen'd binary search — O(log n) per row inside whole-stage codegen.
@@ -485,7 +488,8 @@ object SortedBucket {
       if (a.isNullAt(mid))
         throw new IllegalArgumentException(
           "graft_sorted_bucket: null element in cut array")
-      if (a.getDouble(mid) <= v) lo = mid + 1 else hi = mid
+      if (SQLOrderingUtil.compareDoubles(a.getDouble(mid), v) <= 0) lo = mid + 1
+      else hi = mid
     }
     lo
   }

@@ -13,13 +13,17 @@ import org.apache.spark.sql.functions._
   *  - skewReport: one map-side-combined keyed shuffle to per-key counts
   *    (output = |keys|, not |rows|), then a tiny global agg broadcast back
   *    over the top-k slice. No row-level data survives the first exchange.
-  *  - percentiles: exact distributed percentiles via the two-pass
-  *    rank-interpolation in [[percentilesExact]] — a disk-backed keyed
-  *    sort plus a broadcast count, O(1) reducer state, safe even when one
-  *    group spans the whole fact table. Spark's built-in `percentile`
-  *    aggregate (which buffers each group's value map in memory) is NOT
-  *    used anywhere; when an approximation suffices, `approx_percentile`
-  *    or the [[histQuantiles]] pow2 sketch is cheaper still (no sort).
+  *  - percentiles: exact distributed percentiles in [[percentilesExact]].
+  *    Input the optimiser sizes at most [[OnePassMaxBytes]] (10 MB) takes
+  *    Spark's built-in `percentile`/`percentile_disc` aggregate in one
+  *    pass; its per-group value map is then bounded by that small input.
+  *    Every other input takes the two-pass rank-interpolation — a
+  *    disk-backed keyed sort or bucketed selection plus a broadcast
+  *    count, O(1) reducer state, safe even when one group spans the whole
+  *    fact table. This file is the only place in the library that calls
+  *    the in-memory aggregate. When an approximation suffices,
+  *    `approx_percentile` or the [[histQuantiles]] pow2 sketch is cheaper
+  *    still (no sort).
   */
 object Stats {
 
@@ -159,13 +163,18 @@ object Stats {
       .orderBy(groupCol, "p")
   }
 
-  /** Exact interpolated percentiles per group WITHOUT per-group value
-    * buffering — the scale-safe default for exact percentiles. Spark's
-    * built-in `percentile` aggregate materialises each group's distinct
-    * values in a single reducer's TypedImperativeAggregate buffer, so a
-    * fact-table-sized group (3 return flags over all of 100 TB of
-    * lineitem) is an executor OOM. This two-pass formulation keeps O(1)
-    * reducer state everywhere:
+  /** Exact interpolated percentiles per group, buffering per-group values
+    * only when the whole input is small. Spark's built-in `percentile`
+    * aggregate materialises each group's distinct values in a single
+    * reducer's TypedImperativeAggregate buffer, so a fact-table-sized
+    * group (3 return flags over all of 100 TB of lineitem) is an executor
+    * OOM. So the aggregate runs only when the optimiser sizes the narrowed
+    * (group, value) input at most [[OnePassMaxBytes]]: its buffers then
+    * hold at most one entry per input row, and one aggregate pass with no
+    * eager job beats the two-pass routes' fixed per-job cost. Reading the
+    * estimate runs no job. Every other input — including an unsized one,
+    * which Catalyst reports as `spark.sql.defaultSizeInBytes` — takes a
+    * two-pass formulation that keeps O(1) reducer state everywhere:
     *
     *  1. rank pass — `row_number` over a keyed sort (`Window.partitionBy
     *     (group).orderBy(value)`): the sort is Spark's disk-backed
@@ -178,7 +187,7 @@ object Stats {
     *     exactly 2·|pcts| doubles per group.
     *
     * Interpolation replicates Spark's `Percentile.getPercentile` formula
-    * bit-for-bit — `v_lo` when ⌈pos⌉ = ⌊pos⌋, else
+    * bit-for-bit — `v_lo` when ⌈pos⌉ = ⌊pos⌋ or v_lo = v_hi, else
     * `(⌈pos⌉−pos)·v_lo + (pos−⌊pos⌋)·v_hi` — which is the ANSI
     * PERCENTILE_CONT semantics DuckDB's `quantile_cont` also implements,
     * so cross-engine hashes are unchanged by the rewrite.
@@ -196,18 +205,19 @@ object Stats {
     * Output: one row per group — `groupCol`, `n`, then one double column
     * per (fraction, name) in `pcts` order.
     *
-    * Router probe cost: when `fewGroupsHint` is None the router pays one
-    * extra distinct-limit-count scan of the group column (bounded at
-    * `maxBucketedGroups + 1` distinct groups, but it still reads the
-    * input once). Callers who know their group cardinality — a 3-flag
-    * dimension, a per-source report — should pass the hint and skip it;
-    * every shipped query does.
+    * Router probe cost: when `fewGroupsHint` is None, an input over the
+    * one-pass bound pays one extra distinct-limit-count scan of the group
+    * column (bounded at `maxBucketedGroups + 1` distinct groups, but it
+    * still reads the input once). Callers who know their group
+    * cardinality — a 3-flag dimension, a per-source report — should pass
+    * the hint and skip it; every shipped query does.
     *
     * `disc = true` switches to ANSI PERCENTILE_DISC semantics (DuckDB's
     * `quantile_disc`, Spark's `percentile_disc`): the single value at
     * rank max(1, ⌈p·n⌉) — the smallest value whose cumulative
     * distribution reaches p — returned verbatim, no interpolation. Same
-    * routes, same state bounds; only the target-rank arithmetic changes.
+    * routes, same state bounds; only the target-rank arithmetic changes
+    * (the one-pass route calls `percentile_disc` instead).
     *
     * `maxRankRows` bounds the selection route's final ranking stage: a
     * target bucket bigger than this re-buckets once more (depth-2
@@ -223,6 +233,47 @@ object Stats {
     require(pcts.nonEmpty && pcts.forall { case (p, _) => p >= 0 && p <= 1 },
       "pcts must be non-empty fractions in [0, 1]")
     val vals = df.select(col(groupCol).as("__g"), valueCol.cast("double").as("__v"))
+    if (vals.queryExecution.optimizedPlan.stats.sizeInBytes <= OnePassMaxBytes)
+      percentilesInOnePass(vals, groupCol, pcts, disc)
+    else percentilesInTwoPasses(vals, groupCol, pcts, maxBucketedGroups,
+      fewGroupsHint, disc, maxRankRows)
+  }
+
+  /** Catalyst size estimate of [[percentilesExact]]'s narrowed (group,
+    * value) input at or under which it runs Spark's in-memory percentile
+    * aggregate: Spark's default broadcast threshold
+    * (`spark.sql.autoBroadcastJoinThreshold`), i.e. an input the engine
+    * would already ship whole to every executor.
+    */
+  val OnePassMaxBytes: Long = 10L * 1024 * 1024
+
+  /** One-pass route: a single `groupBy` whose aggregate keeps each group's
+    * distinct values with their counts. `percentile` interpolates exactly
+    * as the two-pass routes do and `percentile_disc` returns the same
+    * rank's value, so the routes' outputs are the same rows.
+    */
+  private def percentilesInOnePass(vals: DataFrame, groupCol: String,
+                                   pcts: Seq[(Double, String)],
+                                   disc: Boolean): DataFrame = {
+    val outs = pcts.map { case (p, name) =>
+      // a DOUBLE literal: a bare 0.73 would parse as a decimal
+      val frac = s"${p}D"
+      expr(if (disc) s"percentile_disc($frac) WITHIN GROUP (ORDER BY __v)"
+        else s"percentile(__v, $frac)").as(name)
+    }
+    vals.groupBy(col("__g").as(groupCol))
+      .agg(count(lit(1)).as("n"), outs: _*)
+  }
+
+  /** The selection and sort routes of [[percentilesExact]], for input over
+    * [[OnePassMaxBytes]] or of unknown size.
+    */
+  private def percentilesInTwoPasses(vals: DataFrame, groupCol: String,
+                                     pcts: Seq[(Double, String)],
+                                     maxBucketedGroups: Int,
+                                     fewGroupsHint: Option[Boolean],
+                                     disc: Boolean,
+                                     maxRankRows: Long): DataFrame = {
     // ROUTER — both routes are exact; they differ in where the sort
     // parallelism comes from. A keyed sort gets one task PER GROUP, so
     // with few groups (3 return flags over all of lineitem) it would run
@@ -257,7 +308,10 @@ object Stats {
       else {
         val lo = floor(pos(i))
         val hi = ceil(pos(i))
-        when(hi === lo, col(s"__lo_$i"))
+        // equal straddling values return as they are, as getPercentile
+        // does: the weighted sum of a value with itself can miss it by
+        // an ulp ((0.8·−1.5) + (0.2·−1.5) = −1.5000000000000002)
+        when(hi === lo || col(s"__lo_$i") === col(s"__hi_$i"), col(s"__lo_$i"))
           .otherwise((hi.cast("double") - pos(i)) * col(s"__lo_$i") +
             (pos(i) - lo.cast("double")) * col(s"__hi_$i")).as(name)
       }
@@ -446,7 +500,8 @@ object Stats {
     * the ANSI PERCENTILE_CONT semantics both Spark's `percentile` and
     * DuckDB's `quantile_cont` implement), auto-labelled `p<pct>` and
     * rounded to 6dp. Routes through [[percentilesExact]], so it is safe
-    * for fact-sized groups — no per-group value map is ever buffered.
+    * for fact-sized groups: a per-group value map is buffered only when
+    * the optimiser sizes the input at most [[Stats.OnePassMaxBytes]].
     */
   def percentilesBy(df: DataFrame, groupCol: String, valueCol: Column,
                     pcts: Seq[Double],

@@ -452,10 +452,16 @@ object Relational {
     * first agg.
     */
   def qEventsAnomalyMad(spark: SparkSession, dir: String): DataFrame = {
-    // checkpointed: the bucket table is |hours x types| rows, but BOTH
-    // percentile chains below (median, then MAD) pass over it several
-    // times (sketch, bucket-count, target-rank) — unstaged, every pass
-    // re-runs the full events aggregation
+    // checkpointed: the bucket table is |hours x types| rows, and the
+    // final plan reads it three times (the median's input, the MAD's
+    // input and the flagging join) — unstaged, each read re-runs the
+    // events aggregation. With both medians taking percentilesExact's
+    // one-pass route (the table is far under its size bound) staging
+    // still pays, narrowly: traced delta_queries, seed 7, local[4],
+    // construction plus write took 0.45-0.56 s in 10 jobs staged against
+    // 0.61 s in 9 jobs unstaged. A table over the bound takes the
+    // two-pass routes, whose several passes each would otherwise re-run
+    // the aggregation.
     val counts = Tables.events(spark, dir)
       .groupBy(unix_micros(date_trunc("hour", col("ts"))).as("bucket"),
         col("event_type"))
@@ -830,9 +836,10 @@ object Relational {
     * selection route makes exact AND parallel: bucket by sketch cut
     * points (codegen'd binary search), one map-combined (bucket → count)
     * aggregate, then rank only the few target buckets. `fewGroupsHint`
-    * skips the router probe — one group, statically known. The
-    * interpolation is the same PERCENTILE_CONT weighted sum as B14, so
-    * DuckDB's `quantile_cont` hashes identically.
+    * skips the router probe — one group, statically known. A lineitem
+    * the optimiser sizes under `Stats.OnePassMaxBytes` takes the one-pass
+    * aggregate instead. The interpolation is the same PERCENTILE_CONT
+    * weighted sum as B14, so DuckDB's `quantile_cont` hashes identically.
     */
   def qGlobalPercentiles(spark: SparkSession, dir: String): DataFrame =
     graft.ops.stats.Stats.percentilesExact(
@@ -1003,40 +1010,44 @@ object Relational {
     * growth — the headline finance/OLAP time series, computed the way it
     * must be at scale: ONE keyed aggregate collapses the order corpus to
     * |months| rows (revenue summed in exact decimal cents — never FP),
-    * a generated month spine keeps gap months as explicit zero rows (a
-    * missing month reads as -100% MoM, not as a skipped comparison), and
-    * the MoM/YoY lags attach by self-join on ym−1 / ym−12 — no global
-    * window over order-sized data anywhere, and the spine-sized joins
-    * broadcast. Growth ratios are single divisions of exact integers,
-    * floor(v·1e6+0.5)-quantized, NULL when the base month is zero or
-    * before the data starts.
+    * one global aggregate folds those rows into the month bounds and a
+    * month → totals map, and the generated month spine reads each month
+    * from that map, so gap months are explicit zero rows (a missing month
+    * reads as -100% MoM, not as a skipped comparison). Over that dense
+    * spine MoM and YoY are `lag(…, 1)` and `lag(…, 12)`: the orders are
+    * scanned once and the only window runs over |months| rows. Growth
+    * ratios are single divisions of exact integers, floor(v·1e6+0.5)-
+    * quantized, NULL when the base month is zero or before the data
+    * starts.
     */
   def ordersGrowth(spark: SparkSession, dir: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val m = Tables.load(spark, dir, "orders")
       .groupBy((year(col("o_orderdate")) * 12 + month(col("o_orderdate")) - 1)
         .as("__ym"))
       .agg(count(lit(1)).as("n_orders"),
         (sum(dec(col("o_totalprice"))) * 100).cast("long").as("__rev_c"))
-    val bounds = m.agg(min("__ym").as("__lo"), max("__ym").as("__hi"))
-    val spine = broadcast(bounds)
-      .select(explode(sequence(col("__lo"), col("__hi"))).as("__ym"))
-      .join(m, Seq("__ym"), "left")
-      .select(col("__ym"), coalesce(col("n_orders"), lit(0L)).as("n_orders"),
-        coalesce(col("__rev_c"), lit(0L)).as("__rev_c"))
+    val spine = m
+      .agg(min("__ym").as("__lo"), max("__ym").as("__hi"),
+        map_from_entries(collect_list(struct(col("__ym"),
+          struct(col("n_orders"), col("__rev_c"))))).as("__by_ym"))
+      .select(explode(sequence(col("__lo"), col("__hi"))).as("__ym"), col("__by_ym"))
+      .select(col("__ym"), try_element_at(col("__by_ym"), col("__ym")).as("__m"))
+      .select(col("__ym"),
+        coalesce(col("__m.n_orders"), lit(0L)).as("n_orders"),
+        coalesce(col("__m.__rev_c"), lit(0L)).as("__rev_c"))
     def growth(cur: org.apache.spark.sql.Column,
                base: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       when(base > 0, floor((cur - base).cast("double") / base
         * lit(1000000) + lit(0.5)) / lit(1e6))
-    spine.as("c")
-      .join(spine.as("p"), col("c.__ym") - 1 === col("p.__ym"), "left")
-      .join(spine.as("y"), col("c.__ym") - 12 === col("y.__ym"), "left")
+    val byYm = Window.orderBy("__ym")
+    spine
       .select(
-        make_date(expr("c.__ym div 12"), col("c.__ym") % 12 + 1, lit(1))
-          .as("month"),
-        col("c.n_orders"),
-        (col("c.__rev_c") / lit(100.0)).as("revenue"),
-        growth(col("c.__rev_c"), col("p.__rev_c")).as("mom_growth"),
-        growth(col("c.__rev_c"), col("y.__rev_c")).as("yoy_growth"))
+        make_date(expr("__ym div 12"), col("__ym") % 12 + 1, lit(1)).as("month"),
+        col("n_orders"),
+        (col("__rev_c") / lit(100.0)).as("revenue"),
+        growth(col("__rev_c"), lag(col("__rev_c"), 1).over(byYm)).as("mom_growth"),
+        growth(col("__rev_c"), lag(col("__rev_c"), 12).over(byYm)).as("yoy_growth"))
       .orderBy("month")
   }
 
@@ -2012,13 +2023,15 @@ object Relational {
 
   /** B14: exact interpolated percentiles per group — via the two-pass
     * rank-interpolation ([[graft.ops.stats.Stats.percentilesExact]]), NOT
-    * Spark's in-memory `percentile` aggregate: with 3 return flags over
-    * all of lineitem, each group is ~1/3 of the fact table and the
-    * built-in aggregate would buffer that group's value map on a single
-    * reducer. The two-pass form keeps O(1) reducer state (disk-backed
+    * Spark's in-memory `percentile` aggregate at scale: with 3 return
+    * flags over all of lineitem, each group is ~1/3 of the fact table and
+    * the built-in aggregate would buffer that group's value map on a
+    * single reducer. The two-pass form keeps O(1) reducer state (disk-backed
     * keyed sort + broadcast counts) at identical PERCENTILE_CONT
-    * semantics. Two value columns → two independent rank passes, joined
-    * on the 3-row outputs.
+    * semantics; only a lineitem the optimiser sizes under
+    * `Stats.OnePassMaxBytes` runs the built-in aggregate, in one pass.
+    * Two value columns → two independent chains, joined on the 3-row
+    * outputs.
     */
   def qMedian(spark: SparkSession, dir: String): DataFrame = {
     // NO spread here, measured twice in r18: a bare spread is a 2.4x
@@ -2873,8 +2886,10 @@ object Relational {
     * inter-arrival gaps in micros are near-unique, so Spark's in-memory
     * `percentile` aggregate would buffer an |events|-sized value map per
     * event type on one reducer — the two-pass form keeps O(1) reducer
-    * state. The rank window re-partitions on the same event_type key the
-    * lag window used, so the keyed sort is the only heavy exchange.
+    * state, and only a gap table the optimiser sizes under
+    * `Stats.OnePassMaxBytes` takes the built-in aggregate. The rank window
+    * re-partitions on the same event_type key the lag window used, so the
+    * keyed sort is the only heavy exchange.
     */
   def qEventsGapStats(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("event_type").orderBy(col("ts"), col("event_id"))

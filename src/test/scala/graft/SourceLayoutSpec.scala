@@ -10,9 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * from [[Session.local]] (or the user-configured
   * [[graft.io.Config.sparkSession]]), thread pools from [[Bounded.map]],
   * PG element JSON from the one native writer that [[graft.etl.PgGraph]]
-  * calls, every operator is batch (no Structured Streaming source, sink or
-  * state), and every main that ships is named in README's tool list,
-  * which names no other.
+  * calls, Spark's in-memory percentile aggregates from
+  * [[graft.ops.stats.Stats]] alone, every operator is batch (no
+  * Structured Streaming source, sink or state), and every main that ships
+  * is named in README's tool list, which names no other.
   */
 class SourceLayoutSpec extends AnyFunSuite {
 
@@ -55,6 +56,16 @@ class SourceLayoutSpec extends AnyFunSuite {
     assert(sources.filter(_._2.contains("""map_entries(col("properties"))""")).map(_._1.toString) ===
       Seq.empty)
     assert(sources.filter(_._2.contains("primitivesAsString")).map(_._1.toString) === Seq.empty)
+  }
+
+  test("the in-memory percentile aggregates appear only in Stats") {
+    // Stats.percentilesExact calls them only under its input-size bound;
+    // a call anywhere else would buffer a fact-sized group's values
+    val aggregate = """(?<![A-Za-z_])percentile(\(|_disc)""".r
+    val sites = sources.collect {
+      case (p, src) if aggregate.findFirstIn(src).isDefined => p.toString
+    }
+    assert(sites === Seq("graft/ops/stats/Stats.scala"))
   }
 
   test("README's tool list names exactly the mains that ship") {

@@ -262,17 +262,25 @@ class ConfigSpec extends graft.SparkSpec {
     } finally spark.conf.set("spark.sql.shuffle.partitions", before)
   }
 
-  test("the streaming state-store backend rides the config path to the session") {
-    // a YAML config selects a Spark state-store backend without code
-    // changes — the conf key must reach the session
+  test("reliable staging rides the config path to DataFrames.stage") {
+    // a YAML config switches every staging point to reliable checkpoints
+    // without code changes: the key must reach the session, and stage()
+    // must then checkpoint into the context's checkpoint directory
     spark
+    val ckDir = java.nio.file.Files.createTempDirectory("graft-cfg-ck").toFile
+    spark.sparkContext.setCheckpointDir(ckDir.toString)
     try {
       val s = Config.sparkSession(Map(
         "master" -> "local[2]",
-        "config.spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
-      assert(s.conf.get("spark.sql.streaming.stateStore.providerClass")
-        .endsWith("RocksDBStateStoreProvider"))
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+        "config.spark.graft.staging.reliable" -> "true"))
+      assert(s.conf.get(DataFrames.ReliableStagingKey) === "true")
+      val staged = DataFrames.stage(s.range(5).toDF("id"))
+      val rdd = staged.queryExecution.analyzed.collectFirst {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+      }
+      assert(rdd.flatMap(_.getCheckpointFile).exists(_.contains(ckDir.getName)),
+        s"not reliably checkpointed under $ckDir")
+      assert(staged.count() === 5)
+    } finally spark.conf.unset(DataFrames.ReliableStagingKey)
   }
 }

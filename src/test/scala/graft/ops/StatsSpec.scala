@@ -363,6 +363,13 @@ class StatsSpec extends SparkSpec {
 
   // ---- percentilesBy ------------------------------------------------------
 
+  // The same rows with no size estimate: a frame built from an RDD plans
+  // as `spark.sql.defaultSizeInBytes`, so percentilesExact takes its
+  // selection or sort route instead of the one-pass aggregate it picks
+  // for a small in-memory frame.
+  private def unsized(df: org.apache.spark.sql.DataFrame) =
+    spark.createDataFrame(df.rdd, df.schema)
+
   test("percentilesBy computes exact interpolated percentiles per group") {
     val df = ((1 to 5).map(v => ("a", v)) ++ Seq(("b", 10), ("b", 20))).toDF("g", "v")
     val out = Stats.percentilesBy(df, "g", col("v"), Seq(0.25, 0.5, 0.9))
@@ -392,7 +399,7 @@ class StatsSpec extends SparkSpec {
     }
     val df = rows.toDF("g", "v")
     val pcts = Seq(0.0, 0.1, 0.5, 0.73, 0.95, 1.0)
-    val got = Stats.percentilesExact(df, "g", col("v"),
+    val got = Stats.percentilesExact(unsized(df), "g", col("v"),
         pcts.zipWithIndex.map { case (p, i) => (p, s"q$i") })
       .orderBy("g").collect()
     val want = df.groupBy("g")
@@ -411,7 +418,7 @@ class StatsSpec extends SparkSpec {
     // both routes are exact: the bucketed-selection route (default for 7
     // groups) and the keyed-sort route (forced via maxBucketedGroups = 0)
     // must return identical rows
-    val sorted = Stats.percentilesExact(df, "g", col("v"),
+    val sorted = Stats.percentilesExact(unsized(df), "g", col("v"),
         pcts.zipWithIndex.map { case (p, i) => (p, s"q$i") },
         maxBucketedGroups = 0)
       .orderBy("g").collect()
@@ -434,7 +441,7 @@ class StatsSpec extends SparkSpec {
           expr(s"percentile_disc($p) WITHIN GROUP (ORDER BY v)")): _*)
       .orderBy("g").collect()
     for (force <- Seq(64, 0)) { // selection route, then sort route
-      val got = Stats.percentilesExact(df, "g", col("v"), named,
+      val got = Stats.percentilesExact(unsized(df), "g", col("v"), named,
           maxBucketedGroups = force, disc = true)
         .orderBy("g").collect()
       assert(got.length === want.length)
@@ -454,7 +461,7 @@ class StatsSpec extends SparkSpec {
     // route makes it exact AND parallel. Reference: in-memory sort.
     val vs = (0 until 2000).map(i => ((i * 48271) % 1009).toDouble / 3.0)
     val df = vs.map(v => ("all", v)).toDF("g", "v")
-    val got = Stats.percentilesExact(df, "g", col("v"),
+    val got = Stats.percentilesExact(unsized(df), "g", col("v"),
       Seq((0.5, "p50"), (0.999, "p999")), fewGroupsHint = Some(true)).head
     val sorted = vs.sorted
     def ref(p: Double): Double = {
@@ -555,10 +562,10 @@ class StatsSpec extends SparkSpec {
     val pcts = Seq(0.0, 0.25, 0.5, 0.77, 0.999, 1.0)
     val named = pcts.zipWithIndex.map { case (p, i) => (p, s"q$i") }
     for (disc <- Seq(false, true)) {
-      val deep = Stats.percentilesExact(df, "g", col("v"), named,
+      val deep = Stats.percentilesExact(unsized(df), "g", col("v"), named,
           fewGroupsHint = Some(true), disc = disc, maxRankRows = 3L)
         .orderBy("g").collect()
-      val flat = Stats.percentilesExact(df, "g", col("v"), named,
+      val flat = Stats.percentilesExact(unsized(df), "g", col("v"), named,
           fewGroupsHint = Some(true), disc = disc)
         .orderBy("g").collect()
       assert(deep.toSeq === flat.toSeq, s"disc=$disc")
@@ -583,7 +590,7 @@ class StatsSpec extends SparkSpec {
     // single-level and SOME recurse — the union path
     val skew = ((0 until 400).map(i => ("big", (i * 48271 % 997).toDouble)) ++
       (0 until 12).map(i => ("tiny", i.toDouble))).toDF("g", "v")
-    val got = Stats.percentilesExact(skew, "g", col("v"),
+    val got = Stats.percentilesExact(unsized(skew), "g", col("v"),
         Seq((0.5, "p50"), (0.9, "p90")), fewGroupsHint = Some(true),
         maxRankRows = 2L)
       .orderBy("g").collect()
@@ -614,7 +621,7 @@ class StatsSpec extends SparkSpec {
         Seq(0.0, 0.5, 1.0).map(p => expr(s"percentile(v, $p)")): _*)
       .orderBy("g").collect()
     for ((force, disc) <- Seq((64, false), (0, false), (64, true), (0, true))) {
-      val got = Stats.percentilesExact(df, "g", col("v"), named,
+      val got = Stats.percentilesExact(unsized(df), "g", col("v"), named,
           maxBucketedGroups = force, disc = disc)
         .orderBy("g").collect()
       assert(got.length === 3, s"route=$force disc=$disc: all 3 groups must survive")
@@ -631,6 +638,49 @@ class StatsSpec extends SparkSpec {
         if (w.getString(0) != "empty")
           (2 to 4).foreach(i => assert(g2.getDouble(i) === w.getDouble(i)))
       }
+    }
+  }
+
+  test("percentilesExact one-pass, selection and sort routes agree") {
+    // the small in-memory frame takes the one-pass aggregate, its unsized
+    // twin the selection (64 groups allowed) or sort (0) route; all three
+    // must return the same rows. Row equality reads NaN as NaN and -0.0 as
+    // 0.0, which is also how every route orders them (ties).
+    val vals: Seq[java.lang.Double] = Seq(3.0, null, -1.5, 3.0, Double.NaN,
+      -0.0, 0.0, 7.25, 3.0, null, -1.5, 0.0, 12.0, -0.0, 1e-3, 3.0)
+    // a tie at an interpolated rank must return the tied value itself:
+    // 0.8·−1.5 + 0.2·−1.5 is −1.5000000000000002
+    val rows: Seq[(String, java.lang.Double)] =
+      vals.zipWithIndex.map { case (v, i) => ("g" + (i % 3), v) } ++
+        Seq.fill(4)(("all_null", null: java.lang.Double)) ++
+        Seq.fill(3)(("ties", -1.5: java.lang.Double))
+    val grouped = rows.toDF("g", "v")
+    val global = rows.map { case (_, v) => ("all", v) }.toDF("g", "v")
+    val named = Seq(0.0, 0.1, 0.2, 0.25, 0.5, 0.73, 0.9, 1.0)
+      .zipWithIndex.map { case (p, i) => (p, s"q$i") }
+    val onePass = """(?<![a-z_])percentile(_disc)?\(""".r
+    def run(df: org.apache.spark.sql.DataFrame, route: String, disc: Boolean) = {
+      val out = route match {
+        case "one-pass" => Stats.percentilesExact(df, "g", col("v"), named, disc = disc)
+        case "selection" => Stats.percentilesExact(unsized(df), "g", col("v"), named,
+          maxBucketedGroups = 64, disc = disc)
+        case "sort" => Stats.percentilesExact(unsized(df), "g", col("v"), named,
+          maxBucketedGroups = 0, disc = disc)
+      }
+      val plan = out.queryExecution.executedPlan.toString
+      val took =
+        if (plan.contains("graft_sorted_bucket")) "selection"
+        else if (plan.contains("row_number")) "sort"
+        else if (onePass.findFirstIn(plan).isDefined && !plan.contains("Window")) "one-pass"
+        else "unknown"
+      assert(took === route, plan)
+      out.orderBy("g").collect().toSeq
+    }
+    for (df <- Seq(grouped, global); disc <- Seq(false, true)) {
+      val want = run(df, "one-pass", disc)
+      assert(want.map(_.getLong(1)).sum === rows.size)
+      for (route <- Seq("selection", "sort"))
+        assert(run(df, route, disc) === want, s"$route disc=$disc")
     }
   }
 }
